@@ -47,17 +47,21 @@ def materialize_ctes(sql: str) -> str:
     localCheckpoint, in the oracle's engine (measured r15:
     graph_bowtie_census 151 s → 0.08 s at sf0.001, byte-identical
     output). Pure execution hint: MATERIALIZED cannot change results.
-    The pattern ``name AS (`` only occurs at CTE definitions (column
-    aliases are ``expr AS name``; derived tables alias AFTER the
-    parenthesis), so the rewrite is syntax-safe; each converted
-    oracle is still value-verified against Spark by the differential
-    suite."""
+    Besides CTE definitions, ``name AS (`` also opens a named window
+    (``WINDOW w AS (``), which is left alone; column aliases are
+    ``expr AS name`` and derived tables alias AFTER the parenthesis.
+    A second window in one clause (``WINDOW a AS (…), b AS (…)``) is
+    not recognised and would turn into SQL DuckDB rejects. Each
+    converted oracle is still value-verified against Spark by the
+    differential suite."""
     import re
 
     global _CTE_HEAD
     if _CTE_HEAD is None:
-        _CTE_HEAD = re.compile(r"\b([a-z_][a-z_0-9]*) AS \(")
-    return _CTE_HEAD.sub(r"\1 AS MATERIALIZED (", sql)
+        _CTE_HEAD = re.compile(r"((?i:\bWINDOW)\s+)?\b([a-z_][a-z_0-9]*) AS \(")
+    return _CTE_HEAD.sub(
+        lambda m: m[0] if m[1] else f"{m[2]} AS MATERIALIZED (", sql
+    )
 
 
 def pin(df):

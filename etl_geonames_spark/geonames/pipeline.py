@@ -9,8 +9,9 @@ The engine declares the same dataflow as one logical plan per output
 branch and lets Catalyst pick the physical strategy. All lookups
 (admin1, admin2, type map, allowlist) are broadcast-shaped: the fact
 table scales to 100 TB, the dimensions stay in the tens of MB, so the
-whole pipeline runs shuffle-free — scan → codegen'd filter/project →
-two broadcast hash joins → sink.
+whole pipeline runs shuffle-free — scan → broadcast existence join
+(allowlist) → codegen'd filter/project → two broadcast hash joins →
+sink.
 
 Documented divergences from the reference (all deliberate):
   - join-miss on the admin2 probe *crashes* the reference
@@ -61,8 +62,9 @@ class GeonamesConfig:
     base_uri: str = BASE_URI
 
     def extra_ids(self) -> list[str]:
-        """Strip the URI prefix → bare geonameids (geonames.js:234-236)."""
-        return [u.replace(self.base_uri, "") for u in self.extra_uris]
+        """Strip the URI prefix → bare geonameids (geonames.js:234-236).
+        JS ``String.replace`` with a string pattern strips the first hit only."""
+        return [u.replace(self.base_uri, "", 1) for u in self.extra_uris]
 
 
 def filters_predicate(
@@ -89,10 +91,17 @@ def filters_predicate(
     ]
     pred = reduce(operator.or_, per_filter)
     if extra_ids:
-        # Broadcast-shaped membership: isin for list-sized allowlists.
-        # (For huge allowlists, swap to a broadcast left-semi join —
-        # same semantics, see operators.relational.filter_extra_uris.)
-        pred = pred | F.col("geonameid").isin(extra_ids)
+        # One path at every size: an IN subquery over a deduplicated
+        # one-column LocalRelation, planned as a broadcast ExistenceJoin
+        # (BuildRight, no shuffle). A literal isin costs one Py4J call
+        # per id, is re-analysed by every later transformation and is
+        # pushed into the scan as a per-row linear In.
+        import pyarrow as pa
+
+        allow = SparkSession.active().createDataFrame(
+            pa.table({"geonameid": sorted(set(extra_ids))})
+        )
+        pred = pred | F.col("geonameid").isin(allow)
     return pred
 
 

@@ -130,13 +130,15 @@ def filter_any_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def filter_extra_uris(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Predicate ∨ broadcast allowlist (extraUris, geonames.js:181,
-    232-237). For list-sized allowlists ``isin`` folds into the scan
-    filter; a large allowlist would become a broadcast left-semi join
-    union'd with the filter branch — same semantics, still
-    shuffle-free."""
+    """Predicate ∨ allowlist (extraUris, geonames.js:181, 232-237), the
+    same single path as :func:`filters_predicate` at every list size:
+    an IN subquery over a one-column LocalRelation, planned as a
+    broadcast ExistenceJoin — no literal In in the plan or the scan,
+    no shuffle."""
+    import pyarrow as pa
+
     pred = filters_predicate([{"o_orderstatus": "F", "o_orderpriority": "1-URGENT"}])
-    allow = [7, 42, 99, 1234]
+    allow = spark.createDataFrame(pa.table({"o_orderkey": [7, 42, 99, 1234]}))
     return (
         load_table(spark, sf_dir, "orders")
         .filter(pred | F.col("o_orderkey").isin(allow))

@@ -199,6 +199,49 @@ def test_empty_filters_quirk(spark, paths):
     assert rels.count() == 0
 
 
+def test_extra_ids_strips_first_base_uri_only():
+    """JS String.replace with a string pattern replaces the first hit."""
+    base = "http://sws.geonames.org/"
+    assert GeonamesConfig(extra_uris=[base + base + "7"]).extra_ids() == [base + "7"]
+
+
+def test_allowlist_edge_ids_match_reference_model(spark, tmp_path):
+    """Duplicate URIs, more ids than OptimizeIn's threshold (10), an id
+    holding ' and , and a null geonameid: the allowlisted filter keeps
+    exactly the rows the reference's row model keeps."""
+    from test_properties import _model_filter
+
+    odd = "90'1,2"
+    rows = FACT_ROWS + [
+        [odd, "Odd", "Odd"] + [""] * 5 + ["DE"] + [""] * 10,
+        ["", "NoId", "NoId"] + [""] * 5 + ["DE"] + [""] * 10,
+    ]
+    path = tmp_path / "allCountries.txt"
+    path.write_text("\n".join("\t".join(r) for r in rows) + "\n")
+    base = "http://sws.geonames.org/"
+    ids = ["1007", "1007", odd, odd] + [str(i) for i in range(5000, 5012)]
+    cfg = GeonamesConfig(
+        filters=[{"countryCode": "NL", "featureClass": "P"}],
+        extra_uris=[base + i for i in ids],
+    )
+    fact = read_all_countries(spark, str(path))
+    pred = filters_predicate(cfg.filters, cfg.extra_ids())
+    got = sorted(
+        (r["geonameid"] or "", r["name"]) for r in fact.filter(pred).collect()
+    )
+    want = sorted(
+        (r[0], r[1])
+        for r in rows
+        if _model_filter(
+            {"geonameid": r[0] or None, "countryCode": r[8], "featureClass": r[6]},
+            cfg.filters,
+            set(cfg.extra_ids()),
+        )
+    )
+    assert got == want
+    assert ("1007", "Berlin") in got and (odd, "Odd") in got
+
+
 def test_conjunction_filter(spark, paths):
     """R.whereEq is a conjunction: all pairs must match."""
     fact = read_all_countries(spark, paths["allCountries.txt"])

@@ -63,7 +63,7 @@ def spark_results(spark, sf_dir):
             if name not in ORACLES:
                 again_len = len(QUERIES[name](spark, sf_dir).toPandas())
             return name, (pdf, again_len, None)
-        except BaseException as exc:  # noqa: BLE001 — re-raised in the test
+        except Exception as exc:  # noqa: BLE001 — re-raised in the test
             return name, (None, None, exc)
 
     out = {}

@@ -113,6 +113,58 @@ def test_geonames_relations_shuffle_free(spark, tmp_path):
     assert not has_node(rels, "SortMergeJoin")
 
 
+def _existence_joins(df) -> list[tuple[str, str]]:
+    """(build side, build child) of every broadcast ExistenceJoin in the
+    physical plan, found by walking the plan tree under AQE's wrapper."""
+    found = []
+
+    def walk(node) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name == "BroadcastHashJoinExec" and str(node.joinType()).startswith(
+            "ExistenceJoin"
+        ):
+            side = str(node.buildSide())
+            build = node.right() if side == "BuildRight" else node.left()
+            if build.getClass().getSimpleName() == "BroadcastExchangeExec":
+                build = build.child()
+            found.append((side, build.getClass().getSimpleName()))
+        for i in range(node.children().size()):
+            walk(node.children().apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())  # noqa: SLF001
+    return found
+
+
+def test_geonames_allowlist_is_broadcast_existence_join(spark, tmp_path):
+    """An allowlist past OptimizeIn's 10-literal threshold stays one
+    broadcast ExistenceJoin over a LocalTableScan: no shuffle, and no
+    literal In pushed into the TSV scan (a per-row linear compare)."""
+    from etl_geonames_spark.geonames import GeonamesConfig
+    from etl_geonames_spark.geonames.pipeline import run_pipeline
+    from etl_geonames_spark.schemas import ADMIN_CODE_SCHEMA
+    from etl_geonames_spark.sources.tsv import read_all_countries
+
+    row = ["1001", "A", "A", "", "52.0", "4.0", "P", "PPL", "NL", "", "07",
+           "0392", "", "", "0", "", "", "", ""]
+    path = tmp_path / "allCountries.txt"
+    path.write_text("\t".join(row) + "\n")
+    fact = read_all_countries(spark, str(path))
+    dim = spark.createDataFrame([], ADMIN_CODE_SCHEMA)
+    cfg = GeonamesConfig(
+        types={"PPL": "x"},
+        filters=[{"countryCode": "NL"}],
+        extra_uris=[f"http://sws.geonames.org/{i}" for i in range(2000, 2025)],
+    )
+    pits, rels = run_pipeline(fact, dim, dim, cfg)
+    for df in (pits, rels):
+        assert shuffle_exchange_count(df) == 0
+        assert _existence_joins(df) == [("BuildRight", "LocalTableScanExec")]
+        assert "FileScan csv" in explain_str(df, mode="simple")
+        assert "In(geonameid" not in pushed_filters(df)
+
+
 def test_win_ntile_is_distributed_not_single_task(spark, sf_dir):
     """The registered NTILE must never plan the fact table through a
     global single-task window: the sort is a rangepartitioning

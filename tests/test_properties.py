@@ -246,6 +246,23 @@ def test_qround_is_cross_engine_exact(spark):
     assert got == want  # exact ==, no tolerance: the invariant is bitwise
 
 
+def test_materialize_ctes_leaves_named_windows_alone():
+    """Only CTE heads become ``AS MATERIALIZED (``; ``WINDOW w AS (``
+    is a window definition and must stay valid, same-result SQL."""
+    import duckdb
+
+    from etl_geonames_spark.functions import materialize_ctes
+
+    sql = (
+        "WITH t AS (SELECT range AS x FROM range(4)) "
+        "SELECT x, sum(x) OVER w AS s FROM t WINDOW w AS (ORDER BY x) ORDER BY x"
+    )
+    out = materialize_ctes(sql)
+    assert "t AS MATERIALIZED (" in out and "WINDOW w AS (ORDER BY x)" in out
+    con = duckdb.connect()
+    assert con.execute(out).fetchall() == con.execute(sql).fetchall()
+
+
 def test_geohash_matches_public_scheme(spark):
     """geo_geohash's encoding checked against canonical geohash.org
     vectors — the oracle shares the query's arithmetic, so only an

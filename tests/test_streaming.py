@@ -110,15 +110,22 @@ def test_geonames_pipeline_as_stream(spark, tmp_path):
         "\n".join("\t".join(r) for r in rows) + "\n"
     )
     cfg = GeonamesConfig(
-        types={"PPL": "hg:Place"}, filters=[{"countryCode": "NL"}]
+        types={"PPL": "hg:Place"},
+        filters=[{"countryCode": "NL"}],
+        extra_uris=["http://sws.geonames.org/1003"],
     )
     pits = geonames_pits_stream(spark, str(src), cfg)
     assert pits.isStreaming
     result = run_available_now(pits, "t_geonames_pits")
-    rows_out = result.collect()
-    # NL + typed only: Amsterdam passes, Berlin (DE) and SomeHill (HLL) drop
-    assert [r["uri"] for r in rows_out] == ["http://sws.geonames.org/1001"]
-    assert rows_out[0]["geometry"]["coordinates"] == [4.89, 52.37]
+    by_uri = {r["uri"]: r for r in result.collect()}
+    # NL + typed: Amsterdam passes, SomeHill (HLL) drops; Berlin (DE) is
+    # forced through by the allowlist (a stream-static existence join)
+    assert sorted(by_uri) == [
+        "http://sws.geonames.org/1001",
+        "http://sws.geonames.org/1003",
+    ]
+    amsterdam = by_uri["http://sws.geonames.org/1001"]
+    assert amsterdam["geometry"]["coordinates"] == [4.89, 52.37]
 
 
 def test_streaming_checkpoint_exactly_once(spark, tmp_path):
