@@ -2,6 +2,7 @@ from etl_geonames_spark.geonames.pipeline import (  # noqa: F401
     GeonamesConfig,
     build_pits,
     build_relations,
+    envelope_lines,
     filters_predicate,
     resolve_type,
     run_pipeline,

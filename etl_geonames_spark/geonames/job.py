@@ -19,12 +19,15 @@ Config keys (all optional except where noted):
     ``file://`` URLs work for testing/mirrors.
   - ``liesIn``: relation type constant (default ``hg:liesIn``).
   - ``envelope``: if true, additionally write the reference's
-    byte-parity interleaved ``{type, obj}`` stream.
+    interleaved ``{type, obj}`` stream: byte-identical to the job's own
+    ``pits``/``relations`` lines, structurally equal to the reference's
+    stream (see :func:`~etl_geonames_spark.geonames.tagged_envelope`).
 
 Steps (mirroring geonames.js):
   1. download: fetch allCountries.zip + admin TSVs, unzip (driver-side).
   2. transform: Spark pipeline → ``<out>/pits`` and ``<out>/relations``
-     NDJSON directories (+ ``<out>/envelope`` when requested).
+     NDJSON directories (+ ``<out>/envelope`` when requested, framed
+     from the two outputs read back as text — no second pipeline run).
 """
 
 from __future__ import annotations
@@ -37,7 +40,7 @@ from pyspark.sql import SparkSession
 
 from etl_geonames_spark.geonames.pipeline import (
     GeonamesConfig,
-    tagged_envelope,
+    envelope_lines,
     transform_from_paths,
 )
 from etl_geonames_spark.ingest import BASE_URL, download
@@ -123,7 +126,11 @@ def transform_step(cfg: dict, work_dir: str, spark: SparkSession) -> None:
     write_ndjson(rels, os.path.join(out, "relations"))
     if cfg.get("envelope"):
         write_ndjson_lines(
-            tagged_envelope(pits, rels), os.path.join(out, "envelope")
+            envelope_lines(
+                spark.read.text(os.path.join(out, "pits")),
+                spark.read.text(os.path.join(out, "relations")),
+            ),
+            os.path.join(out, "envelope"),
         )
     # the dataset card the reference ships beside its outputs
     # (geonames.dataset.json) — driver-side metadata, not a Spark job

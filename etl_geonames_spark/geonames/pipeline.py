@@ -25,8 +25,9 @@ Documented divergences from the reference (all deliberate):
   - the reference writes one interleaved NDJSON stream of
     ``{type, obj}`` envelopes (geonames.js:160-174); the engine's
     native outputs are two typed DataFrames (the idiomatic Spark
-    shape), with :func:`tagged_envelope` reproducing the envelope
-    stream structurally (parsed-object parity, not byte parity).
+    shape); :func:`envelope_lines` frames their lines as the envelope
+    stream, byte-identical to the engine's own lines and structurally
+    equal to the reference's (parsed-object parity, not byte parity).
 """
 
 from __future__ import annotations
@@ -357,25 +358,36 @@ def run_pipeline(
     )
 
 
+def envelope_lines(pit_lines: DataFrame, rel_lines: DataFrame) -> DataFrame:
+    """Frame two one-string-column DataFrames of JSON lines as the
+    reference's interleaved ``{type, obj}`` stream (geonames.js:160-170):
+    each line is wrapped verbatim, so the envelope is byte-identical to
+    the lines it is given. Returns the union in a ``json`` column."""
+
+    def wrap(lines: DataFrame, kind: str) -> DataFrame:
+        return lines.select(
+            F.concat(
+                F.lit(f'{{"type":"{kind}","obj":'),
+                F.col(lines.columns[0]),
+                F.lit("}"),
+            ).alias("json")
+        )
+
+    return wrap(pit_lines, "pit").unionByName(wrap(rel_lines, "relation"))
+
+
 def tagged_envelope(pits: DataFrame, relations: DataFrame) -> DataFrame:
-    """Reproduce the reference's interleaved ``{type, obj}`` NDJSON
-    stream (geonames.js:160-170) as a one-column DataFrame of JSON
-    lines — *structural* parity (same keys, same nesting, same values),
-    not byte parity: Spark's to_json serializes integral doubles as
+    """:func:`envelope_lines` over ``to_json`` of each row — the same
+    lines the JSON sink writes. Against the reference this is
+    *structural* parity (same keys, same nesting, same values), not
+    byte parity: Spark's to_json serializes integral doubles as
     ``52.0`` where JS JSON.stringify emits ``52``, and omits null struct
     fields where JS emits ``null``. Consumers should compare parsed
     objects, which is what tests/test_geonames_parity.py pins."""
-    pit_lines = pits.select(
-        F.to_json(
-            F.struct(F.lit("pit").alias("type"), F.struct("*").alias("obj"))
-        ).alias("json")
+    return envelope_lines(
+        pits.select(F.to_json(F.struct("*")).alias("json")),
+        relations.select(F.to_json(F.struct("*")).alias("json")),
     )
-    rel_lines = relations.select(
-        F.to_json(
-            F.struct(F.lit("relation").alias("type"), F.struct("*").alias("obj"))
-        ).alias("json")
-    )
-    return pit_lines.unionByName(rel_lines)
 
 
 def transform_from_paths(

@@ -18,10 +18,10 @@ def write_ndjson(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def write_ndjson_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write a one-string-column DataFrame of pre-serialized JSON lines
-    verbatim (text sink). Used with
-    :func:`etl_geonames_spark.geonames.tagged_envelope` for byte-level
-    parity with the reference's interleaved ``{type, obj}`` stream —
-    the JSON sink would double-encode it."""
+    verbatim (text sink): the ``{type, obj}`` stream of
+    :func:`etl_geonames_spark.geonames.envelope_lines`, byte-identical
+    to the written pits/relations lines and structurally equal to the
+    reference's. The JSON sink would double-encode it."""
     df.write.mode(mode).text(path)
 
 

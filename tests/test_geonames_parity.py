@@ -16,11 +16,13 @@ from pyspark.sql import functions as F
 
 from etl_geonames_spark.geonames import (
     GeonamesConfig,
+    envelope_lines,
     filters_predicate,
     resolve_type,
     run_pipeline,
     tagged_envelope,
 )
+from etl_geonames_spark.sources.sinks import write_ndjson
 from etl_geonames_spark.sources.tsv import read_admin_codes, read_all_countries
 
 # 19 tab-separated columns (geonames.js:24-44); '' = empty field.
@@ -281,3 +283,33 @@ def test_tagged_envelope_roundtrip(spark, paths):
     assert set(pit) >= {"uri", "name", "type", "geometry", "data"}
     rel = next(l["obj"] for l in lines if l["type"] == "relation")
     assert set(rel) == {"from", "to", "type"}
+
+
+def test_envelope_framing_has_one_definition(spark, paths, tmp_path):
+    """``tagged_envelope`` over the pipeline and ``envelope_lines`` over
+    the JSON sink's written lines give the same bytes: ``to_json`` is the
+    sink's serialization, dropped null fields included."""
+    # the fixture plus a row with no name (a null field the JSON writers
+    # drop) and an unparseable latitude (a null array element they keep)
+    nameless = ["1011", "", "", "", "garbage", "5.5", "P", "PPL", "NL", "",
+                "07", "0392", "", "", "", "", "", "", ""]
+    dump = tmp_path / "allCountries.txt"
+    dump.write_text(
+        "\n".join("\t".join(r) for r in FACT_ROWS + [nameless]) + "\n",
+        encoding="utf-8",
+    )
+    fact = read_all_countries(spark, str(dump))
+    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
+    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
+    pits, rels = run_pipeline(fact, a1, a2, CONFIG)
+    write_ndjson(pits, str(tmp_path / "pits"))
+    write_ndjson(rels, str(tmp_path / "relations"))
+    read_back = envelope_lines(
+        spark.read.text(str(tmp_path / "pits")),
+        spark.read.text(str(tmp_path / "relations")),
+    )
+    want = sorted(r["json"] for r in tagged_envelope(pits, rels).collect())
+    assert want == sorted(r["json"] for r in read_back.collect())
+    nameless_line = next(line for line in want if "/1011" in line)
+    assert '"name"' not in nameless_line
+    assert '"coordinates":[5.5,null]' in nameless_line

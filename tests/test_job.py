@@ -4,15 +4,26 @@
 
 from __future__ import annotations
 
+import glob
 import json
 import zipfile
+from collections import Counter
+from pathlib import Path
 
 from etl_geonames_spark.geonames.job import run
 
 
-def test_job_end_to_end(spark, tmp_path):
+# a name holding '"', '\\' and non-ASCII text pins the JSON escaping and
+# the UTF-8 round trip from the JSON sink through the envelope's text read
+ODD_NAME = 'Köln "Alt"\\'
+
+
+def _serve(tmp_path):
+    """A file:// dump server: allCountries.zip + the two admin TSVs."""
     rows = [
         ["1001", "Amsterdam", "Amsterdam", "", "52.37", "4.89", "P", "PPLA",
+         "NL", "", "07", "0363", "", "", "0", "", "", "", ""],
+        ["1002", ODD_NAME, "Koln Alt", "", "52.36", "4.90", "P", "PPL",
          "NL", "", "07", "0363", "", "", "0", "", "", "", ""],
         ["1003", "Berlin", "Berlin", "", "52.52", "13.40", "P", "PPLC",
          "DE", "", "16", "00", "", "", "0", "", "", "", ""],
@@ -30,36 +41,64 @@ def test_job_end_to_end(spark, tmp_path):
     (server / "admin2Codes.txt").write_text(
         "NL.07.0363\tGemeente Amsterdam\tGemeente Amsterdam\t2759793\n"
     )
+    return server
+
+
+def _run(spark, tmp_path, config) -> str:
+    cfg_path = tmp_path / "config.json"
+    cfg_path.write_text(json.dumps(config))
+    return run(str(cfg_path), str(tmp_path / "work"), spark=spark)
+
+
+def _lines(directory) -> list[str]:
+    """Every line of a Spark output directory's part files, decoded
+    strictly as UTF-8 (each line ends in ``\\n``)."""
+    return [
+        line
+        for part in sorted(glob.glob(f"{directory}/part-*"))
+        for line in Path(part).read_text(encoding="utf-8").split("\n")[:-1]
+    ]
+
+
+def test_job_end_to_end(spark, tmp_path):
+    server = _serve(tmp_path)
     (tmp_path / "extra-uris.json").write_text(
         json.dumps(["http://sws.geonames.org/1003"])
     )
-    config = {
+    out = _run(spark, tmp_path, {
         # the reference README's configuration surface (README.md:11-19)
         "countries": ["NL"],
         "types": {"PPL": "hg:Place"},
         "extraUris": str(tmp_path / "extra-uris.json"),
         "baseUrl": f"file://{server}/",
         "envelope": True,
-    }
-    cfg_path = tmp_path / "config.json"
-    cfg_path.write_text(json.dumps(config))
-
-    out = run(str(cfg_path), str(tmp_path / "work"), spark=spark)
+    })
 
     pits = spark.read.json(f"{out}/pits")
-    # Amsterdam (NL filter) + Berlin (extra-uris override past the filter)
+    # Amsterdam and Köln (NL filter) + Berlin (extra-uris override past
+    # the filter)
     assert {r["uri"] for r in pits.select("uri").collect()} == {
         "http://sws.geonames.org/1001",
+        "http://sws.geonames.org/1002",
         "http://sws.geonames.org/1003",
     }
+    assert pits.filter(pits["name"] == ODD_NAME).count() == 1
     rels = spark.read.json(f"{out}/relations")
     assert rels.filter(
         (rels["from"] == "http://sws.geonames.org/1001")
         & (rels["to"] == "http://sws.geonames.org/2759793")
         & (rels["type"] == "hg:liesIn")
     ).count() == 1
-    envelope = spark.read.text(f"{out}/envelope")
-    assert envelope.count() == pits.count() + rels.count()
+    # the envelope is exactly the written lines, each wrapped once
+    envelope = _lines(f"{out}/envelope")
+    assert Counter(envelope) == Counter(
+        [f'{{"type":"pit","obj":{line}}}' for line in _lines(f"{out}/pits")]
+        + [f'{{"type":"relation","obj":{line}}}'
+           for line in _lines(f"{out}/relations")]
+    )
+    assert ODD_NAME in {
+        e["obj"].get("name") for e in map(json.loads, envelope)
+    }
 
     # dataset card: field-for-field parity with the reference's
     # geonames.dataset.json (id, licensing, and the JSON-LD @context
@@ -81,3 +120,19 @@ def test_job_end_to_end(spark, tmp_path):
         "@id": "gn:featureCode",
         "@type": "xsd:string",
     }
+
+
+def test_job_empty_output_with_envelope(spark, tmp_path):
+    """``countries: []`` compiles to no filters, and the reference's
+    empty-filters quirk passes nothing: the job still succeeds and all
+    three outputs read back empty."""
+    server = _serve(tmp_path)
+    out = _run(spark, tmp_path, {
+        "countries": [],
+        "types": {"PPL": "hg:Place"},
+        "baseUrl": f"file://{server}/",
+        "envelope": True,
+    })
+    for name in ("pits", "relations", "envelope"):
+        assert spark.read.text(f"{out}/{name}").count() == 0
+        assert _lines(f"{out}/{name}") == []

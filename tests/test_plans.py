@@ -165,6 +165,49 @@ def test_geonames_allowlist_is_broadcast_existence_join(spark, tmp_path):
         assert "In(geonameid" not in pushed_filters(df)
 
 
+def test_geonames_envelope_reads_back_the_written_outputs(
+    spark, tmp_path, monkeypatch
+):
+    """The job's envelope sink scans only the pits/relations it has just
+    written: no CSV scan of the dump, no broadcast join, no shuffle —
+    the pipeline does not run a second time."""
+    import os
+    from urllib.parse import urlparse
+
+    from etl_geonames_spark.geonames import job
+
+    landed = tmp_path / "landed"
+    landed.mkdir()
+    row = ["1001", "A", "A", "", "52.0", "4.0", "P", "PPL", "NL", "", "07",
+           "0392", "", "", "0", "", "", "", ""]
+    (landed / "allCountries.txt").write_text("\t".join(row) + "\n")
+    (landed / "admin1CodesASCII.txt").write_text("NL.07\tN\tN\t2\n")
+    (landed / "admin2Codes.txt").write_text("NL.07.0392\tH\tH\t3\n")
+    (tmp_path / "extra.json").write_text('["http://sws.geonames.org/1003"]')
+
+    recorded = []
+
+    def record(df, path, *args, **kwargs):
+        recorded.append(df)
+        return write_lines(df, path, *args, **kwargs)
+
+    write_lines = job.write_ndjson_lines
+    monkeypatch.setattr(job, "write_ndjson_lines", record)
+    cfg = {"countries": ["NL"], "types": {"PPL": "x"},
+           "extraUris": str(tmp_path / "extra.json"), "envelope": True}
+    job.transform_step(cfg, str(tmp_path), spark)
+
+    (envelope,) = recorded
+    plan = explain_str(envelope, mode="simple")
+    assert "FileScan csv" not in plan
+    assert not has_node(envelope, "BroadcastExchange")
+    assert not has_broadcast_hash_join(envelope)
+    assert shuffle_exchange_count(envelope) == 0
+    out = os.path.join(str(tmp_path), "out")
+    scanned = {os.path.dirname(urlparse(f).path) for f in envelope.inputFiles()}
+    assert scanned == {os.path.join(out, "pits"), os.path.join(out, "relations")}
+
+
 def test_win_ntile_is_distributed_not_single_task(spark, sf_dir):
     """The registered NTILE must never plan the fact table through a
     global single-task window: the sort is a rangepartitioning
