@@ -25,9 +25,12 @@ Config keys (all optional except where noted):
 
 Steps (mirroring geonames.js):
   1. download: fetch allCountries.zip + admin TSVs, unzip (driver-side).
-  2. transform: Spark pipeline → ``<out>/pits`` and ``<out>/relations``
-     NDJSON directories (+ ``<out>/envelope`` when requested, framed
-     from the two outputs read back as text — no second pipeline run).
+  2. transform: one Spark action over one scan of the dump writes both
+     ``<out>/pits`` and ``<out>/relations`` (NDJSON ``part-*.txt`` files
+     and a ``_SUCCESS`` marker each), and the action's row counts
+     (``pits``, ``relations``, ``a2_misses``, ``a1_misses``) go to
+     ``<out>/_metrics.json``; ``<out>/envelope`` when requested, framed
+     from the two outputs read back as text — no second pipeline run.
 """
 
 from __future__ import annotations
@@ -36,15 +39,15 @@ import argparse
 import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 from etl_geonames_spark.geonames.pipeline import (
     GeonamesConfig,
     envelope_lines,
-    transform_from_paths,
+    output_lines_from_paths,
 )
 from etl_geonames_spark.ingest import BASE_URL, download
-from etl_geonames_spark.sources.sinks import write_ndjson, write_ndjson_lines
+from etl_geonames_spark.sources.sinks import write_lines_by_kind, write_ndjson_lines
 
 
 def load_config(path: str) -> dict:
@@ -114,16 +117,20 @@ def transform_step(cfg: dict, work_dir: str, spark: SparkSession) -> None:
     """Step 2 (geonames.js:223-254): the Spark pipeline → NDJSON."""
     landed = os.path.join(work_dir, "landed")
     out = os.path.join(work_dir, "out")
-    pipeline_cfg = config_to_pipeline(cfg)
-    pits, rels = transform_from_paths(
+    counts = Observation()
+    lines = output_lines_from_paths(
         spark,
         os.path.join(landed, "allCountries.txt"),
         os.path.join(landed, "admin1CodesASCII.txt"),
         os.path.join(landed, "admin2Codes.txt"),
-        pipeline_cfg,
+        config_to_pipeline(cfg),
+        observation=counts,
     )
-    write_ndjson(pits, os.path.join(out, "pits"))
-    write_ndjson(rels, os.path.join(out, "relations"))
+    write_lines_by_kind(lines, out, ("pits", "relations"))
+    # '_' keeps Spark readers of <out> off the file
+    with open(os.path.join(out, "_metrics.json"), "w") as f:
+        json.dump(counts.get, f, indent=2)
+        f.write("\n")
     if cfg.get("envelope"):
         write_ndjson_lines(
             envelope_lines(

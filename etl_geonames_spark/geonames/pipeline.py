@@ -5,13 +5,17 @@ Reference dataflow (geonames.js:223-254): scan TSV → parse → filter
 resolution → drop untyped → broadcast-probe admin2/admin1 for parent →
 emit PIT nodes + liesIn edges as NDJSON.
 
-The engine declares the same dataflow as one logical plan per output
-branch and lets Catalyst pick the physical strategy. All lookups
-(admin1, admin2, type map, allowlist) are broadcast-shaped: the fact
-table scales to 100 TB, the dimensions stay in the tens of MB, so the
-whole pipeline runs shuffle-free — scan → broadcast existence join
-(allowlist) → codegen'd filter/project → two broadcast hash joins →
-sink.
+The job declares the same dataflow as one logical plan over one scan
+of the dump (:func:`output_lines`): each typed row becomes a pit line
+and, when it has 3 admin codes, a relation row, as the reference's
+flatMap does, and one partitioned write lands both outputs. Catalyst
+picks the physical strategy. All lookups (admin1, admin2, type map,
+allowlist) are broadcast-shaped: the fact table scales to 100 TB, the
+dimensions stay in the tens of MB, so the whole pipeline runs
+shuffle-free — scan → broadcast existence join (allowlist) → codegen'd
+filter/project → generate → two broadcast hash joins → sink.
+:func:`build_pits` and :func:`build_relations` return the same outputs
+as two typed DataFrames, from the same column definitions.
 
 Documented divergences from the reference (all deliberate):
   - join-miss on the admin2 probe *crashes* the reference
@@ -24,10 +28,11 @@ Documented divergences from the reference (all deliberate):
     uses try_cast → null. Identical for well-formed input.
   - the reference writes one interleaved NDJSON stream of
     ``{type, obj}`` envelopes (geonames.js:160-174); the engine's
-    native outputs are two typed DataFrames (the idiomatic Spark
-    shape); :func:`envelope_lines` frames their lines as the envelope
-    stream, byte-identical to the engine's own lines and structurally
-    equal to the reference's (parsed-object parity, not byte parity).
+    native outputs are two NDJSON directories, ``pits`` and
+    ``relations``; :func:`envelope_lines` frames their lines as the
+    envelope stream, byte-identical to the engine's own lines and
+    structurally equal to the reference's (parsed-object parity, not
+    byte parity).
 """
 
 from __future__ import annotations
@@ -194,16 +199,17 @@ def with_resolved_type(df: DataFrame, config: GeonamesConfig) -> DataFrame:
     return df.withColumn("type", resolve_type(F.col("featureCode"), config.types))
 
 
-def build_pits(df: DataFrame, config: GeonamesConfig) -> DataFrame:
-    """Project typed rows into nested PIT documents (geonames.js:137-158).
+def _typed(df: DataFrame, config: GeonamesConfig) -> DataFrame:
+    """Typed rows only: untyped rows emit nothing (geonames.js:175-177)."""
+    return with_resolved_type(df, config).filter(F.col("type").isNotNull())
 
-    Untyped rows emit nothing (geonames.js:175-177). Coordinates are
-    ``[longitude, latitude]`` doubles (geonames.js:143-146) — GeoJSON
-    order, the reference's most correctness-sensitive quirk.
-    """
-    typed = with_resolved_type(df, config).filter(F.col("type").isNotNull())
+
+def _pit_columns(config: GeonamesConfig) -> list[Column]:
+    """The PIT document's fields over a typed row (geonames.js:137-158).
+    Coordinates are ``[longitude, latitude]`` doubles (geonames.js:143-146)
+    — GeoJSON order, the reference's most correctness-sensitive quirk."""
     blank = lambda c: F.coalesce(F.col(c), F.lit(""))  # noqa: E731
-    return typed.select(
+    return [
         F.concat(F.lit(config.base_uri), F.col("geonameid")).alias("uri"),
         F.col("name"),
         F.col("type"),
@@ -224,7 +230,89 @@ def build_pits(df: DataFrame, config: GeonamesConfig) -> DataFrame:
             blank("admin3Code").alias("admin3Code"),
             blank("admin4Code").alias("admin4Code"),
         ).alias("data"),
+    ]
+
+
+def _admin_keys() -> tuple[Column, Column]:
+    """The admin2 key ``codes.join('.')`` (geonames.js:105) and the admin1
+    key of its first two codes (geonames.js:107-109), over ``_codes``."""
+    codes = F.col("_codes")
+    return F.array_join(codes, "."), F.array_join(F.slice(codes, 1, 2), ".")
+
+
+def _join_admins(rows: DataFrame, admin1: DataFrame, admin2: DataFrame) -> DataFrame:
+    """Left-join the admin2 row keyed by ``_key3`` (``_a2_id``) and the
+    admin1 row keyed by ``_key2`` (``_a1_id``). Both dimension joins are
+    explicit broadcasts: at full scale the fact side is the 100 TB
+    table, admin1/admin2 stay a few MB, so the physical plan is two
+    BroadcastHashJoins with zero shuffle. A null key never matches."""
+    a2 = F.broadcast(
+        admin2.select(
+            F.col("code").alias("_a2_code"), F.col("geonameid").alias("_a2_id")
+        )
     )
+    a1 = F.broadcast(
+        admin1.select(
+            F.col("code").alias("_a1_code"), F.col("geonameid").alias("_a1_id")
+        )
+    )
+    return rows.join(a2, F.col("_key3") == F.col("_a2_code"), "left").join(
+        a1, F.col("_key2") == F.col("_a1_code"), "left"
+    )
+
+
+def _miss_counts() -> list[Column]:
+    """Probe misses over joined rows: a keyed row with no admin2 parent,
+    and a self-parent fallback that misses admin1 (only decidable on an
+    admin2 hit)."""
+    a2_id = F.col("_a2_id")
+    a1_miss = a2_id.isNotNull() & (F.col("geonameid") == a2_id) & F.col("_a1_id").isNull()
+    return [
+        F.count_if(F.col("_key3").isNotNull() & a2_id.isNull()).alias("a2_misses"),
+        F.count_if(a1_miss).alias("a1_misses"),
+    ]
+
+
+def _parent_id(on_miss: str = "drop") -> Column:
+    """The parent geonameid over a joined row (geonames.js:105-109): the
+    admin2 row, or the admin1 row when the row is its own admin2 parent.
+    ``"drop"`` leaves it null on a probe miss; ``"fail"`` raises instead,
+    naming the offending key."""
+    self_parent = F.col("geonameid") == F.col("_a2_id")
+    if on_miss == "drop":
+        return F.when(self_parent, F.col("_a1_id")).otherwise(F.col("_a2_id"))
+    fail = lambda dim, key: F.raise_error(  # noqa: E731
+        F.concat(F.lit(f"{dim} probe miss for key "), F.col(key))
+    ).cast("string")
+    return (
+        F.when(F.col("_a2_id").isNull(), fail("admin2", "_key3"))
+        .when(
+            self_parent,
+            F.when(F.col("_a1_id").isNull(), fail("admin1", "_key2")).otherwise(
+                F.col("_a1_id")
+            ),
+        )
+        .otherwise(F.col("_a2_id"))
+    )
+
+
+def _relation_columns(config: GeonamesConfig, parent: Column) -> list[Column]:
+    """The liesIn edge's fields (geonames.js:111-117)."""
+    return [
+        F.concat(F.lit(config.base_uri), F.col("geonameid")).alias("from"),
+        F.concat(F.lit(config.base_uri), parent).alias("to"),
+        F.lit(config.lies_in).alias("type"),
+    ]
+
+
+def build_pits(df: DataFrame, config: GeonamesConfig) -> DataFrame:
+    """Project typed rows into nested PIT documents (geonames.js:137-158).
+
+    Untyped rows emit nothing (geonames.js:175-177). Coordinates are
+    ``[longitude, latitude]`` doubles (geonames.js:143-146) — GeoJSON
+    order, the reference's most correctness-sensitive quirk.
+    """
+    return _typed(df, config).select(*_pit_columns(config))
 
 
 def build_relations(
@@ -263,76 +351,31 @@ def build_relations(
         naming the offending key), failing the job exactly where the
         reference would crash. No extra pass, no driver round-trip.
 
-    Both dimension joins are explicit broadcasts: at full scale the
-    fact side is the 100 TB table, admin1/admin2 stay a few MB, so the
-    physical plan is two BroadcastHashJoins with zero shuffle.
+    Both dimension joins are broadcasts (:func:`_join_admins`).
     """
     if on_miss not in ("drop", "fail"):
         raise ValueError(f"on_miss must be 'drop' or 'fail', got {on_miss!r}")
-    typed = with_resolved_type(df, config).filter(F.col("type").isNotNull())
+    key3, key2 = _admin_keys()
     gated = (
-        typed.withColumn("_codes", _codes_array())
+        _typed(df, config)
+        .withColumn("_codes", _codes_array())
         .filter(F.size("_codes") == 3)
-        .withColumn("_key3", F.array_join("_codes", "."))
-        .withColumn("_key2", F.array_join(F.slice("_codes", 1, 2), "."))
+        .withColumn("_key3", key3)
+        .withColumn("_key2", key2)
     )
-    a2 = F.broadcast(
-        admin2.select(
-            F.col("code").alias("_a2_code"), F.col("geonameid").alias("_a2_id")
-        )
-    )
-    a1 = F.broadcast(
-        admin1.select(
-            F.col("code").alias("_a1_code"), F.col("geonameid").alias("_a1_id")
-        )
-    )
-    a2_miss = F.col("_a2_id").isNull()
-    # self-parent fallback that misses admin1 (only decidable on a2 hit)
-    a1_miss = (
-        F.col("_a2_id").isNotNull()
-        & (F.col("geonameid") == F.col("_a2_id"))
-        & F.col("_a1_id").isNull()
-    )
-    joined = gated.join(a2, gated["_key3"] == a2["_a2_code"], "left").join(
-        a1, gated["_key2"] == a1["_a1_code"], "left"
-    )
+    joined = _join_admins(gated, admin1, admin2)
     if observation is not None:
-        one_if = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
         joined = joined.observe(
-            observation,
-            one_if(a2_miss).alias("a2_misses"),
-            one_if(a1_miss).alias("a1_misses"),
-            F.count(F.lit(1)).alias("gated_rows"),
+            observation, *_miss_counts(), F.count(F.lit(1)).alias("gated_rows")
         )
-    if on_miss == "fail":
-        parent = F.when(
-            a2_miss,
-            F.raise_error(
-                F.concat(F.lit("admin2 probe miss for key "), F.col("_key3"))
-            ).cast("string"),
-        ).when(
-            F.col("geonameid") == F.col("_a2_id"),
-            F.when(
-                F.col("_a1_id").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit("admin1 probe miss for key "), F.col("_key2")
-                    )
-                ).cast("string"),
-            ).otherwise(F.col("_a1_id")),
-        ).otherwise(F.col("_a2_id"))
-    else:
-        parent = F.when(
-            F.col("geonameid") == F.col("_a2_id"), F.col("_a1_id")
-        ).otherwise(F.col("_a2_id"))
-    resolved = joined.withColumn("_parent_id", parent).filter(
+    resolved = joined.withColumn("_parent_id", _parent_id(on_miss)).filter(
         F.col("_parent_id").isNotNull()
     )
-    return resolved.select(
-        F.concat(F.lit(config.base_uri), F.col("geonameid")).alias("from"),
-        F.concat(F.lit(config.base_uri), F.col("_parent_id")).alias("to"),
-        F.lit(config.lies_in).alias("type"),
-    )
+    return resolved.select(*_relation_columns(config, F.col("_parent_id")))
+
+
+def _filtered(df: DataFrame, config: GeonamesConfig) -> DataFrame:
+    return df.filter(filters_predicate(config.filters, config.extra_ids()))
 
 
 def run_pipeline(
@@ -348,13 +391,82 @@ def run_pipeline(
     ``on_miss`` / ``observation`` configure join-miss strictness and
     drop accounting for the relations branch — see
     :func:`build_relations`."""
-    filtered = df.filter(filters_predicate(config.filters, config.extra_ids()))
+    filtered = _filtered(df, config)
     return (
         build_pits(filtered, config),
         build_relations(
             filtered, admin1, admin2, config, on_miss=on_miss,
             observation=observation,
         ),
+    )
+
+
+def output_lines(
+    df: DataFrame,
+    admin1: DataFrame,
+    admin2: DataFrame,
+    config: GeonamesConfig,
+    observation=None,
+) -> DataFrame:
+    """Both outputs of the transform step from one pass over ``df``: a
+    ``(kind, value)`` DataFrame whose ``value`` is a finished NDJSON line,
+    ``kind`` ``"pits"`` or ``"relations"`` — the reference's flatMap of
+    one streamed row into a PIT and its liesIn edge (geonames.js:160-170).
+
+    Filter, then typing, then each typed row becomes a pit row carrying
+    ``to_json`` of :func:`build_pits`'s document and, when it has exactly
+    3 admin codes, a relations row carrying its admin keys. Only then are
+    the dims joined (:func:`_join_admins`): pit rows have null keys and
+    never match, so a duplicated dim code multiplies relations (as
+    :func:`build_relations` does) and never pits. A relation's line is
+    ``to_json`` of :func:`build_relations`'s edge; a probe miss drops it.
+    The lines equal ``to_json`` of the two builders' rows, which is what
+    the JSON sink writes.
+
+    Pass a :class:`pyspark.sql.Observation` as ``observation`` to count
+    ``pits``, ``relations``, ``a2_misses`` and ``a1_misses`` on the same
+    action (one CollectMetrics node, no extra pass)."""
+    none = F.lit(None).cast("string")
+    key3, key2 = _admin_keys()
+    pit = F.struct(
+        F.lit("pits").alias("kind"),
+        F.to_json(F.struct(*_pit_columns(config))).alias("value"),
+        none.alias("_key3"),
+        none.alias("_key2"),
+    )
+    rel = F.struct(
+        F.lit("relations").alias("kind"),
+        none.alias("value"),
+        key3.alias("_key3"),
+        key2.alias("_key2"),
+    )
+    rows = (
+        _typed(_filtered(df, config), config)
+        .withColumn("_codes", _codes_array())
+        .select(
+            "geonameid",
+            F.inline(
+                F.array_compact(F.array(pit, F.when(F.size("_codes") == 3, rel)))
+            ),
+        )
+    )
+    joined = _join_admins(rows, admin1, admin2).withColumn("_parent_id", _parent_id())
+    relation = F.col("_parent_id").isNotNull()
+    if observation is not None:
+        joined = joined.observe(
+            observation,
+            F.count_if(F.col("kind") == "pits").alias("pits"),
+            F.count_if((F.col("kind") == "relations") & relation).alias("relations"),
+            *_miss_counts(),
+        )
+    # pit rows carry their line; a relation row's line exists once its
+    # parent resolves (filtered first, so to_json runs once per edge)
+    line = F.coalesce(
+        F.col("value"),
+        F.to_json(F.struct(*_relation_columns(config, F.col("_parent_id")))),
+    )
+    return joined.filter(F.col("value").isNotNull() | relation).select(
+        "kind", line.alias("value")
     )
 
 
@@ -390,6 +502,18 @@ def tagged_envelope(pits: DataFrame, relations: DataFrame) -> DataFrame:
     )
 
 
+def _read_paths(
+    spark: SparkSession, all_countries_path: str, admin1_path: str, admin2_path: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    from etl_geonames_spark.sources.tsv import read_admin_codes, read_all_countries
+
+    return (
+        read_all_countries(spark, all_countries_path),
+        read_admin_codes(spark, admin1_path),
+        read_admin_codes(spark, admin2_path),
+    )
+
+
 def transform_from_paths(
     spark: SparkSession,
     all_countries_path: str,
@@ -400,11 +524,22 @@ def transform_from_paths(
     """Path-level entry mirroring the reference's transform step
     signature (geonames.js:223): reads the three TSVs and runs the
     pipeline."""
-    from etl_geonames_spark.sources.tsv import read_admin_codes, read_all_countries
-
     return run_pipeline(
-        read_all_countries(spark, all_countries_path),
-        read_admin_codes(spark, admin1_path),
-        read_admin_codes(spark, admin2_path),
+        *_read_paths(spark, all_countries_path, admin1_path, admin2_path), config
+    )
+
+
+def output_lines_from_paths(
+    spark: SparkSession,
+    all_countries_path: str,
+    admin1_path: str,
+    admin2_path: str,
+    config: GeonamesConfig,
+    observation=None,
+) -> DataFrame:
+    """:func:`output_lines` over the three TSVs at these paths."""
+    return output_lines(
+        *_read_paths(spark, all_countries_path, admin1_path, admin2_path),
         config,
+        observation=observation,
     )

@@ -3,10 +3,16 @@
 The reference emits NDJSON through its framework writer
 (``tools.writer.writeObjects``, geonames.js:172). Spark's JSON sink
 *is* NDJSON (one JSON object per line, one file per partition), so the
-engine's sink is a thin, declarative wrapper.
+engine's sinks are thin, declarative wrappers. The GeoNames job writes
+its pre-serialized lines as text instead: both outputs from one scan
+of the dump through :func:`write_lines_by_kind`, and the envelope
+through :func:`write_ndjson_lines`.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -23,6 +29,47 @@ def write_ndjson_lines(df: DataFrame, path: str, mode: str = "overwrite") -> Non
     to the written pits/relations lines and structurally equal to the
     reference's. The JSON sink would double-encode it."""
     df.write.mode(mode).text(path)
+
+
+def write_lines_by_kind(df: DataFrame, out: str, kinds: tuple[str, ...]) -> None:
+    """Write a ``(kind, value)`` DataFrame of pre-serialized lines in one
+    action: the ``value`` lines of each kind land verbatim (text sink) in
+    ``<out>/<kind>``, as ``part-*.txt`` files plus a ``_SUCCESS`` marker
+    — e.g. the GeoNames job's ``pits`` and ``relations`` from
+    :func:`etl_geonames_spark.geonames.output_lines`.
+
+    One write with ``partitionBy("kind")`` into ``<out>/_lines``, then,
+    on the driver, for each kind: replace ``<out>/<kind>`` with the
+    rename of ``_lines/kind=<kind>`` (or an empty directory, when no row
+    has that kind), write its ``_SUCCESS``, and finally remove the
+    staging directory. Every kind's directory therefore holds only this
+    write's lines, as an overwrite would. A kind outside ``kinds``
+    raises before any output is touched. The renames are driver-side
+    POSIX renames, so ``out`` must be a local or locally mounted path,
+    and a reader that lists ``<out>/<kind>`` between its removal and
+    the rename sees it missing.
+
+    Cost: the partitioned write sorts each task's rows by ``kind``
+    before writing (Spark's planned ``Sort``, no shuffle), so each task
+    buffers its lines in sort memory, spilling past it, instead of
+    streaming them to one file."""
+    staging = os.path.join(out, "_lines")
+    df.select("kind", "value").write.mode("overwrite").partitionBy("kind").text(
+        staging
+    )
+    written = {n for n in os.listdir(staging) if n.startswith("kind=")}
+    unexpected = written - {f"kind={k}" for k in kinds}
+    if unexpected:
+        raise ValueError(f"lines of unexpected kinds {sorted(unexpected)} in {staging}")
+    for kind in kinds:
+        target = os.path.join(out, kind)
+        shutil.rmtree(target, ignore_errors=True)
+        if f"kind={kind}" in written:
+            os.rename(os.path.join(staging, f"kind={kind}"), target)
+        else:
+            os.makedirs(target)
+        open(os.path.join(target, "_SUCCESS"), "w").close()
+    shutil.rmtree(staging)
 
 
 def write_parquet(

@@ -49,6 +49,8 @@ ADMIN2_ROWS = [
     ["BE.BRU.21", "Ville de Bruxelles", "Ville de Bruxelles", "4004"],
 ]
 
+BASE = "http://sws.geonames.org/"
+
 CONFIG = GeonamesConfig(
     types={"PPL": "hg:Place", "PPLA": "hg:PlaceA", "ADM2": "hg:Admin2"},
     filters=[{"countryCode": "NL"}],
@@ -313,3 +315,61 @@ def test_envelope_framing_has_one_definition(spark, paths, tmp_path):
     nameless_line = next(line for line in want if "/1011" in line)
     assert '"name"' not in nameless_line
     assert '"coordinates":[5.5,null]' in nameless_line
+
+
+def test_duplicate_admin_codes_never_duplicate_pits(spark, tmp_path):
+    """A dim code listed twice multiplies relations, as build_relations
+    does, and never pits: the job joins the dims only after each typed
+    row is split into its pit line and its relation row."""
+    import glob
+    import json
+    from collections import Counter
+
+    from etl_geonames_spark.geonames import job
+
+    landed = tmp_path / "landed"
+    landed.mkdir()
+    tables = {
+        "allCountries.txt": FACT_ROWS,
+        "admin1CodesASCII.txt": ADMIN1_ROWS + [["NL.07", "NH bis", "NH bis", "3004"]],
+        "admin2Codes.txt": ADMIN2_ROWS + [["NL.07.0392", "Dup", "Dup", "2003"]],
+    }
+    for fname, rows in tables.items():
+        (landed / fname).write_text(
+            "\n".join("\t".join(r) for r in rows) + "\n", encoding="utf-8"
+        )
+    (tmp_path / "extra.json").write_text(json.dumps(CONFIG.extra_uris))
+    job.transform_step(
+        {"filters": CONFIG.filters, "types": CONFIG.types,
+         "extraUris": str(tmp_path / "extra.json")},
+        str(tmp_path),
+        spark,
+    )
+
+    def written(name):
+        return Counter(
+            line
+            for part in glob.glob(str(tmp_path / "out" / name / "part-*"))
+            for line in open(part, encoding="utf-8").read().split("\n")[:-1]
+        )
+
+    pits, rels = run_pipeline(
+        read_all_countries(spark, str(landed / "allCountries.txt")),
+        read_admin_codes(spark, str(landed / "admin1CodesASCII.txt")),
+        read_admin_codes(spark, str(landed / "admin2Codes.txt")),
+        CONFIG,
+    )
+
+    def to_json(df):
+        return Counter(
+            r[0] for r in df.select(F.to_json(F.struct("*"))).collect()
+        )
+
+    assert written("pits") == to_json(pits)
+    assert set(written("pits").values()) == {1}
+    assert written("relations") == to_json(rels)
+    # 1001 meets both admin2 rows of NL.07.0392, each once per admin1
+    # row of NL.07: two edges, each written twice
+    edge = '{{"from":"http://sws.geonames.org/1001","to":"{}","type":"hg:liesIn"}}'
+    for parent in ("2002", "2003"):
+        assert written("relations")[edge.format(BASE + parent)] == 2

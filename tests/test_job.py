@@ -10,7 +10,10 @@ import zipfile
 from collections import Counter
 from pathlib import Path
 
+import pytest
+
 from etl_geonames_spark.geonames.job import run
+from etl_geonames_spark.sources.sinks import write_lines_by_kind
 
 
 # a name holding '"', '\\' and non-ASCII text pins the JSON escaping and
@@ -100,6 +103,17 @@ def test_job_end_to_end(spark, tmp_path):
         e["obj"].get("name") for e in map(json.loads, envelope)
     }
 
+    # the one write's row counts; Berlin (DE.16.00) is gated and has no
+    # admin2 row
+    with open(f"{out}/_metrics.json") as f:
+        metrics = json.load(f)
+    assert metrics == {
+        "pits": len(_lines(f"{out}/pits")),
+        "relations": len(_lines(f"{out}/relations")),
+        "a2_misses": 1,
+        "a1_misses": 0,
+    }
+
     # dataset card: field-for-field parity with the reference's
     # geonames.dataset.json (id, licensing, and the JSON-LD @context
     # a Histograph-style consumer uses to type the data fields)
@@ -136,3 +150,36 @@ def test_job_empty_output_with_envelope(spark, tmp_path):
     for name in ("pits", "relations", "envelope"):
         assert spark.read.text(f"{out}/{name}").count() == 0
         assert _lines(f"{out}/{name}") == []
+
+
+def test_job_rerun_replaces_outputs(spark, tmp_path):
+    """A second run into the same work dir leaves only its own lines in
+    every output, no staging directory, and a _SUCCESS marker in each."""
+    server = _serve(tmp_path)
+    config = {"types": {"PPL": "hg:Place"}, "baseUrl": f"file://{server}/",
+              "envelope": True}
+    _run(spark, tmp_path, {**config, "countries": ["NL", "DE"]})
+    out = _run(spark, tmp_path, {**config, "countries": ["NL"]})
+    (tmp_path / "fresh").mkdir()
+    want = _run(spark, tmp_path / "fresh", {**config, "countries": ["NL"]})
+
+    assert not any(p.name.startswith("kind=") or p.name == "_lines"
+                   for p in Path(out).iterdir())
+    for name in ("pits", "relations", "envelope"):
+        assert Counter(_lines(f"{out}/{name}")) == Counter(_lines(f"{want}/{name}"))
+        assert (Path(out) / name / "_SUCCESS").is_file()
+    assert not any("/1003" in line for line in _lines(f"{out}/pits"))
+    assert len(_lines(f"{out}/pits")) == 2
+
+
+def test_lines_by_kind_rejects_unexpected_kinds(spark, tmp_path):
+    """A kind the caller did not name would be lost with the staging
+    directory: the sink raises before any output is replaced."""
+    (tmp_path / "pits").mkdir()
+    (tmp_path / "pits" / "keep").write_text("")
+    df = spark.createDataFrame(
+        [("pits", "{}"), ("other", "{}")], "kind string, value string"
+    )
+    with pytest.raises(ValueError, match="kind=other"):
+        write_lines_by_kind(df, str(tmp_path), ("pits",))
+    assert (tmp_path / "pits" / "keep").exists()

@@ -113,28 +113,38 @@ def test_geonames_relations_shuffle_free(spark, tmp_path):
     assert not has_node(rels, "SortMergeJoin")
 
 
-def _existence_joins(df) -> list[tuple[str, str]]:
-    """(build side, build child) of every broadcast ExistenceJoin in the
-    physical plan, found by walking the plan tree under AQE's wrapper."""
+def _broadcast_joins(df) -> list[tuple[str, str, str]]:
+    """(join type, build side, build child) of every BroadcastHashJoin in
+    the physical plan, found by walking the plan tree under AQE's
+    wrapper."""
     found = []
 
     def walk(node) -> None:
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
             return walk(node.executedPlan())
-        if name == "BroadcastHashJoinExec" and str(node.joinType()).startswith(
-            "ExistenceJoin"
-        ):
+        if name == "BroadcastHashJoinExec":
             side = str(node.buildSide())
             build = node.right() if side == "BuildRight" else node.left()
             if build.getClass().getSimpleName() == "BroadcastExchangeExec":
                 build = build.child()
-            found.append((side, build.getClass().getSimpleName()))
+            found.append(
+                (str(node.joinType()), side, build.getClass().getSimpleName())
+            )
         for i in range(node.children().size()):
             walk(node.children().apply(i))
 
     walk(df._jdf.queryExecution().executedPlan())  # noqa: SLF001
     return found
+
+
+def _existence_joins(df) -> list[tuple[str, str]]:
+    """(build side, build child) of every broadcast ExistenceJoin."""
+    return [
+        (side, build)
+        for kind, side, build in _broadcast_joins(df)
+        if kind.startswith("ExistenceJoin")
+    ]
 
 
 def test_geonames_allowlist_is_broadcast_existence_join(spark, tmp_path):
@@ -206,6 +216,54 @@ def test_geonames_envelope_reads_back_the_written_outputs(
     out = os.path.join(str(tmp_path), "out")
     scanned = {os.path.dirname(urlparse(f).path) for f in envelope.inputFiles()}
     assert scanned == {os.path.join(out, "pits"), os.path.join(out, "relations")}
+
+
+def test_geonames_job_scans_the_dump_once(spark, tmp_path, monkeypatch):
+    """Of everything transform_step writes, exactly one DataFrame scans
+    allCountries.txt: pits and relations come from one shuffle-free plan
+    with the allowlist's broadcast ExistenceJoin and the two admin
+    lookups as LeftOuter broadcast joins."""
+    from urllib.parse import urlparse
+
+    from etl_geonames_spark.geonames import job
+
+    landed = tmp_path / "landed"
+    landed.mkdir()
+    row = ["1001", "A", "A", "", "52.0", "4.0", "P", "PPL", "NL", "", "07",
+           "0392", "", "", "0", "", "", "", ""]
+    (landed / "allCountries.txt").write_text("\t".join(row) + "\n")
+    (landed / "admin1CodesASCII.txt").write_text("NL.07\tN\tN\t2\n")
+    (landed / "admin2Codes.txt").write_text("NL.07.0392\tH\tH\t3\n")
+    (tmp_path / "extra.json").write_text('["http://sws.geonames.org/1003"]')
+
+    recorded = []
+
+    def recording(sink):
+        def record(df, *args, **kwargs):
+            recorded.append(df)
+            return sink(df, *args, **kwargs)
+
+        return record
+
+    for name in ("write_ndjson", "write_ndjson_lines", "write_lines_by_kind"):
+        if hasattr(job, name):
+            monkeypatch.setattr(job, name, recording(getattr(job, name)))
+    cfg = {"countries": ["NL"], "types": {"PPL": "x"},
+           "extraUris": str(tmp_path / "extra.json"), "envelope": True}
+    job.transform_step(cfg, str(tmp_path), spark)
+
+    dump = str(landed / "allCountries.txt")
+    scanning = [
+        df for df in recorded
+        if dump in {urlparse(f).path for f in df.inputFiles()}
+    ]
+    assert len(scanning) == 1
+    (lines,) = scanning
+    assert explain_str(lines, mode="simple").count("FileScan csv") == 3
+    assert shuffle_exchange_count(lines) == 0
+    assert _existence_joins(lines) == [("BuildRight", "LocalTableScanExec")]
+    left_outer = [j for j in _broadcast_joins(lines) if j[0] == "LeftOuter"]
+    assert len(left_outer) == 2
 
 
 def test_win_ntile_is_distributed_not_single_task(spark, sf_dir):
