@@ -15,6 +15,8 @@ configuration that makes plans scale-stable:
     TIMESTAMP_NTZ (floor to microseconds, matching DuckDB/Arrow
     truncation semantics).
   - Arrow execution for the Pandas-UDF surface.
+  - ``spark.python.sql.dataFrameDebugging.enabled=false`` (see
+    ``get_spark``).
 """
 
 from __future__ import annotations
@@ -61,6 +63,17 @@ def get_spark(
     ``local[*]``); ``shuffle_partitions`` defaults to the same CPU
     count — on a real cluster you would size this to ~2-3× total
     cores and let AQE coalesce.
+
+    PySpark call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    every ``F.*`` / DataFrame call makes extra Py4J round trips to
+    record its Python call site, about doubling the driver's traffic
+    while a query is built. The trade-off: an analysis error's query
+    context loses its Python call-site fragment (the message and the
+    SQL-side context remain). It is a static conf, so it is set here in
+    the builder; PySpark also caches it process-wide on the first
+    ``F.*`` call. A foreign session (one built elsewhere, such as a
+    verification driver's) keeps its own setting.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if master is None:
@@ -73,6 +86,7 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
         )

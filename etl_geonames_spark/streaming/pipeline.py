@@ -35,21 +35,23 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from etl_geonames_spark.functions import qround
 from etl_geonames_spark.session import apply_runtime_confs
+from etl_geonames_spark.sources.tables import table_schema
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture with the same
     timestamp canonicalization as the batch reader — one codebase,
     two execution modes.
 
-    The file streaming source requires an explicit schema, so we probe
-    the footer with a batch read and mirror whatever the batch path
-    sees: TIMESTAMP(NANOS) fixtures arrive as int64 under
-    ``nanosAsLong`` and are floor-divided to micros; TIMESTAMP(MICROS)
-    fixtures read natively (the driver has shipped both encodings
-    across rounds — the reader must not assume one).
+    The file streaming source requires an explicit schema, so we take
+    the batch reader's (``sources.tables.table_schema``: one footer
+    probe per session) and mirror whatever the batch path sees:
+    TIMESTAMP(NANOS) fixtures arrive as int64 under ``nanosAsLong`` and
+    are floor-divided to micros; TIMESTAMP(MICROS) fixtures read
+    natively (the driver has shipped both encodings across rounds —
+    the reader must not assume one).
     """
     apply_runtime_confs(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = table_schema(spark, sf_dir, "events")
     ts_is_nanos_long = dict(
         (f.name, f.dataType.simpleString()) for f in batch_schema
     ).get("ts") == "bigint"
