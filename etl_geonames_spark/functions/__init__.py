@@ -17,8 +17,6 @@ averages, scores and similarities.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -72,7 +70,7 @@ def pin(df):
     roles (r14 plan audit), so without a pin the whole upstream
     subplan re-executes per branch.
 
-    LAZY form (``localCheckpoint(eager=False)``), the r15 default:
+    The pin is the LAZY form (``localCheckpoint(eager=False)``):
     the RDD is persisted and the plan truncated immediately, but
     materialization happens inside the FIRST consuming job —
     BlockInfoManager's per-block write lock dedupes the sibling-stage
@@ -80,21 +78,14 @@ def pin(df):
     The eager form pays a separate BLOCKING job per pin (~0.15–0.35 s
     scheduling floor at fixture scale — the r14 regression on
     llm_exact_shared_run / llm_dedup_embedding / llm_dedup_cluster);
-    lazy keeps the dedup and drops that job. A/B'd per site in
-    OPTIMIZATION_r15.md; ``SPARK_GRAFT_PIN`` ∈ {lazy, eager, none}
-    exists ONLY for those interleaved in-session probes (default
-    lazy — the driver never sets it).
+    lazy keeps the dedup and drops that job (A/B'd per site in
+    OPTIMIZATION_r15.md).
 
     Same non-replicated executor-local storage caveat as eager
     localCheckpoint: at 100 TB production would persist to
     disk-backed replicated storage (ADVICE r14); the lifecycle
     (within-query, dropped by the bench between queries) is
     unchanged."""
-    mode = os.environ.get("SPARK_GRAFT_PIN", "lazy")
-    if mode == "eager":
-        return df.localCheckpoint()
-    if mode == "none":
-        return df
     return df.localCheckpoint(eager=False)
 
 

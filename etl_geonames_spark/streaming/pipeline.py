@@ -24,7 +24,8 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator
+import os
+from typing import Callable, Iterator
 
 import pandas as pd
 
@@ -236,43 +237,126 @@ def run_available_now(
     return df.sparkSession.table(query_name)
 
 
-def streaming_upsert(
-    events: DataFrame, state_root: str, checkpoint: str
-) -> None:
-    """Streaming CDC upsert via ``foreachBatch``: each micro-batch is
-    compacted to its latest row per user_id, merged with the current
-    state snapshot (keep-latest wins across batch and state), and the
-    result written as a NEW versioned snapshot ``v{batch_id}``.
+# --- versioned snapshot store -------------------------------------------
+#
+# Every ``streaming_*`` maintenance operator below keeps its state as a
+# chain of Parquet snapshots under a root directory, one version per
+# foreachBatch micro-batch, named by the batch_id (_snapshot_path).
+# Micro-batch ``batch_id`` reads the PREDECESSOR snapshot (the newest
+# version strictly older than batch_id), merges its own partial state
+# onto it, and overwrites version batch_id. That one rule is the
+# contract every merge below relies on:
+#
+#   - Retry: foreachBatch re-runs a batch_id whose snapshot write landed
+#     but whose checkpoint commit did not (the crash window). The replay
+#     rewrites the same version from the same base, so an additive merge
+#     (counts, sums, sketch cells) never counts a batch twice; reading
+#     the LATEST snapshot would merge the batch onto its own output.
+#   - Ordering: batch_ids only grow, and versions compare as NUMBERS.
+#     Names are zero-padded to five digits, so past batch 99,999 a
+#     string sort puts v100000 before v99999 and hands every later batch
+#     a stale predecessor (one batch silently dropped from the state).
+#   - Versions, not overwrite-in-place: a Parquet directory cannot be
+#     overwritten while it is the read side of the same job. The chain
+#     is what a lakehouse table format keeps under MERGE INTO, and it
+#     gives AS OF reads (``read_upsert_state(version=)``).
+#
+# Operators with two outputs (pairs + band/cell store) keep one chain
+# per sub-root, both under the same batch_id.
 
-    Versioned snapshots instead of overwrite-in-place: a parquet dir
-    cannot be atomically overwritten while it is the read side of the
-    same job, and the version chain is exactly what a lakehouse table
-    format (Delta/Iceberg) maintains under MERGE INTO — this is the
-    engine-side core of it, with foreachBatch supplying the batch_id
-    for idempotent re-runs (same batch_id → same snapshot path, so a
-    retried batch overwrites its own output, not the chain).
 
-    The reference has no incremental story at all — it rewrites the
-    full NDJSON per run (geonames.js:151-163).
-    """
+def _snapshot_path(root: str, batch_id: int) -> str:
+    return f"{root}/v{batch_id:05d}"
 
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        latest = _keep_latest(batch)
-        cur = read_upsert_state(spark, state_root)
-        if cur is not None:
-            latest = _keep_latest(cur.unionByName(latest))
-        latest.write.mode("overwrite").parquet(
-            f"{state_root}/v{batch_id:05d}"
+
+def read_upsert_state(
+    spark: SparkSession,
+    state_root: str,
+    version: int | None = None,
+    before: int | None = None,
+) -> DataFrame | None:
+    """Read a state snapshot: the newest by default, a specific
+    ``version`` (batch_id) — time travel over the snapshot chain, the
+    same AS OF read a lakehouse table format offers — or, with
+    ``before``, the newest snapshot strictly older than that batch_id
+    (the predecessor read every maintenance merge makes). Returns None
+    before the first batch. The version listing is driver-side and
+    metadata-scale, and orders batch_ids as numbers."""
+    if not os.path.isdir(state_root):
+        return None
+    versions = sorted(
+        int(d[1:]) for d in os.listdir(state_root) if d.startswith("v")
+    )
+    if before is not None:
+        versions = [v for v in versions if v < before]
+    if not versions:
+        return None
+    if version is None:
+        version = versions[-1]
+    elif version not in versions:
+        raise ValueError(
+            f"no snapshot {_snapshot_path(state_root, version)}; "
+            f"have versions {versions}"
         )
+    return spark.read.parquet(_snapshot_path(state_root, version))
 
+
+def _write_snapshot(df: DataFrame, root: str, batch_id: int) -> None:
+    df.write.mode("overwrite").parquet(_snapshot_path(root, batch_id))
+
+
+def _advance(
+    root: str,
+    batch_id: int,
+    partial: DataFrame,
+    merge: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Write version ``batch_id`` under ``root``: the batch's
+    ``partial`` state, or ``merge(predecessor ∪ partial)`` once a
+    predecessor exists."""
+    prev = read_upsert_state(partial.sparkSession, root, before=batch_id)
+    if prev is not None:
+        partial = merge(prev.unionByName(partial))
+    _write_snapshot(partial, root, batch_id)
+
+
+def _drain(stream: DataFrame, checkpoint: str, merge_batch, *args) -> None:
+    """Run ``merge_batch(batch, batch_id, *args)`` on every micro-batch
+    currently in ``stream``, then stop. The checkpoint records the
+    consumed input, so a later drain sees only what arrived since."""
     q = (
-        events.writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: merge_batch(batch, batch_id, *args)
+        )
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+
+
+def streaming_upsert(
+    events: DataFrame, state_root: str, checkpoint: str
+) -> None:
+    """Streaming CDC upsert via ``foreachBatch``: each micro-batch is
+    compacted to its latest row per user_id and merged with the state
+    snapshot (keep-latest wins across batch and state) into a new
+    version of the snapshot store — the engine-side core of what a
+    lakehouse table format does under MERGE INTO.
+
+    The reference has no incremental story at all — it rewrites the
+    full NDJSON per run (geonames.js:151-163).
+    """
+    _drain(events, checkpoint, _upsert_merge_batch, state_root)
+
+
+def _upsert_merge_batch(
+    batch: DataFrame, batch_id: int, state_root: str
+) -> None:
+    """One micro-batch of the upsert. Last-wins is idempotent, so a
+    replay would land on the same state from either base; it reads the
+    predecessor like every other store merge."""
+    _advance(state_root, batch_id, _keep_latest(batch), _keep_latest)
 
 
 def _keep_latest(df: DataFrame) -> DataFrame:
@@ -290,40 +374,6 @@ def _keep_latest(df: DataFrame) -> DataFrame:
     )
 
 
-def read_upsert_state(
-    spark: SparkSession,
-    state_root: str,
-    version: int | None = None,
-    before: int | None = None,
-) -> DataFrame | None:
-    """Read a state snapshot: the newest by default, a specific
-    ``version`` (batch_id) — time travel over the upsert chain, the
-    same AS OF read a lakehouse table format offers — or, with
-    ``before``, the newest snapshot strictly older than that batch_id
-    (the predecessor read an additive merge needs for idempotent
-    retries). Returns None before the first batch. Driver-side
-    directory listing is metadata-scale, not data-scale."""
-    import os
-
-    if not os.path.isdir(state_root):
-        return None
-    versions = sorted(
-        d for d in os.listdir(state_root) if d.startswith("v")
-    )
-    if before is not None:
-        versions = [d for d in versions if int(d[1:]) < before]
-    if not versions:
-        return None
-    if version is not None:
-        name = f"v{version:05d}"
-        if name not in versions:
-            raise ValueError(
-                f"no snapshot {name} under {state_root}; have {versions}"
-            )
-        return spark.read.parquet(f"{state_root}/{name}")
-    return spark.read.parquet(f"{state_root}/{versions[-1]}")
-
-
 def streaming_rollup_maintenance(
     events: DataFrame, state_root: str, checkpoint: str
 ) -> None:
@@ -335,125 +385,65 @@ def streaming_rollup_maintenance(
     :func:`~etl_geonames_spark.operators.timeseries.ts_rollup_hierarchy`
     (whose daily level re-aggregates these same hourly partials).
 
-    Snapshots are versioned per batch_id like :func:`streaming_upsert`
-    (idempotent retries, AS OF reads). A late event lands in its own
-    hour's partial and merges into that one row — the
-    invalidate-one-bucket property that makes continuous aggregates
-    viable at 100 TB.
+    A late event lands in its own hour's partial and merges into that
+    one row — the invalidate-one-bucket property that makes continuous
+    aggregates viable at 100 TB.
     """
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        _rollup_merge_batch(batch, batch_id, state_root)
-
-    q = (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events, checkpoint, _rollup_merge_batch, state_root)
 
 
 def _rollup_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
-    """One micro-batch of continuous-aggregate maintenance. Merges the
-    batch's hourly partial aggregates into the PREDECESSOR snapshot
-    (newest version < batch_id), never the latest: a retry after the
-    snapshot write but before the checkpoint commit would otherwise
-    re-add the batch on top of its own v{batch_id} output. Count/sum
-    are additive, so unlike ``streaming_upsert``'s last-wins merge
-    this one is only idempotent if the retry overwrites from the same
-    base. Module-level so tests can replay a batch_id directly."""
-    spark = batch.sparkSession
+    """One micro-batch of continuous-aggregate maintenance: the batch's
+    hourly partial (count, sum) regroups and sums onto the predecessor.
+    Count/sum are additive, so unlike the upsert's last-wins merge this
+    one is idempotent only because a retry merges onto the same base.
+    Module-level (like every ``_*_merge_batch``) so tests can replay a
+    batch_id directly."""
     partial = batch.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("sum_value"),
     )
-    cur = read_upsert_state(spark, state_root, before=batch_id)
-    if cur is not None:
-        partial = (
-            cur.unionByName(partial)
-            .groupBy("hour", "event_type")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("sum_value").alias("sum_value"),
-            )
-        )
-    partial.write.mode("overwrite").parquet(
-        f"{state_root}/v{batch_id:05d}"
+    _advance(
+        state_root,
+        batch_id,
+        partial,
+        lambda u: u.groupBy("hour", "event_type").agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("sum_value").alias("sum_value"),
+        ),
     )
-
-
-def _read_versioned(
-    spark: SparkSession, root: str, before: int
-) -> DataFrame | None:
-    """Newest snapshot under ``root`` strictly older than batch_id
-    ``before`` (predecessor read — same retry-idempotency argument as
-    :func:`_rollup_merge_batch`)."""
-    import os
-
-    if not os.path.isdir(root):
-        return None
-    versions = sorted(
-        # numeric sort: the zero-padded names sort lexicographically
-        # only up to v99999 — a long-running maintenance job passes
-        # that in days, and a string sort would then silently pick a
-        # stale predecessor (dropping a batch from the state forever)
-        (d for d in os.listdir(root) if d.startswith("v") and int(d[1:]) < before),
-        key=lambda d: int(d[1:]),
-    )
-    if not versions:
-        return None
-    return spark.read.parquet(f"{root}/{versions[-1]}")
 
 
 def _index_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
     """One micro-batch of inverted-index maintenance: the batch's
-    (word → postings) partial merges into the PREDECESSOR snapshot by
-    union + distinct + re-sort per touched word. Postings are SETS, so
-    a crash-window replay of the same batch_id is idempotent by
-    algebra (distinct absorbs the re-union), not just by the
-    predecessor-read discipline. Module-level for the crash-replay
-    tests (same pattern as :func:`_cms_merge_batch`)."""
-    spark = batch.sparkSession
-    partial = (
+    (word → postings) partial merges onto the predecessor by union +
+    distinct + re-sort per touched word. Postings are SETS, so a
+    crash-window replay is idempotent by algebra too (distinct absorbs
+    the re-union)."""
+
+    def postings(rows: DataFrame) -> DataFrame:
+        doc_ids = F.array_sort(
+            F.array_distinct(F.flatten(F.collect_list("postings")))
+        )
+        return rows.groupBy("word").agg(doc_ids.alias("postings")).select(
+            "word", F.size("postings").cast("bigint").alias("df"), "postings"
+        )
+
+    words = (
         batch.select(
             "doc_id", F.explode(F.split("text", " ")).alias("word")
         )
         .filter(F.col("word") != "")
         .distinct()
-        .groupBy("word")
-        .agg(F.collect_list("doc_id").alias("postings"))
+        .select("word", F.array("doc_id").alias("postings"))
     )
-    prev = _read_versioned(spark, state_root, batch_id)
-    if prev is not None:
-        partial = (
-            prev.select("word", "postings")
-            .unionByName(partial)
-            .groupBy("word")
-            .agg(
-                F.array_sort(
-                    F.array_distinct(
-                        F.flatten(F.collect_list("postings"))
-                    )
-                ).alias("postings")
-            )
-        )
-    else:
-        partial = partial.select(
-            "word",
-            F.array_sort(F.array_distinct("postings")).alias("postings"),
-        )
-    partial.select(
-        "word",
-        F.size("postings").cast("bigint").alias("df"),
-        "postings",
-    ).write.mode("overwrite").parquet(f"{state_root}/v{batch_id:05d}")
+    _advance(state_root, batch_id, postings(words), postings)
 
 
 def streaming_index_maintenance(
@@ -471,32 +461,18 @@ def streaming_index_maintenance(
     rewrites touched partitions; head terms (stopwords touch every
     batch) want the same skew handling as the batch BM25 docstring
     describes."""
-
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda batch, batch_id: _index_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs, checkpoint, _index_merge_batch, state_root)
 
 
 def _dedup_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
     """One micro-batch of continuous LSH dedup (see
-    :func:`streaming_dedup_maintenance`). Module-level so the
-    crash-replay tests can re-invoke a batch_id directly: both the
-    band-store read and the pair emission use the PREDECESSOR
-    snapshot (strictly older than batch_id), so a batch replayed
-    after its own v{batch_id} writes but before the checkpoint commit
-    rewrites both outputs from the same base instead of pairing the
-    batch against its own bands (which would re-emit every
-    within-batch pair as a cross pair too)."""
+    :func:`streaming_dedup_maintenance`): within-batch pairs from the
+    band self-join, cross pairs against the predecessor band store.
+    Pairing against the predecessor, not the latest, keeps a replay
+    from joining the batch against its own bands (which would re-emit
+    every within-batch pair as a cross pair too)."""
     from etl_geonames_spark.operators.llm import (
         minhash_bands,
         minhash_signatures,
@@ -516,7 +492,7 @@ def _dedup_merge_batch(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
     )
-    store = _read_versioned(spark, f"{state_root}/bands", batch_id)
+    store = read_upsert_state(spark, f"{state_root}/bands", before=batch_id)
     if store is not None:
         s = store.alias("s")
         cross = bands.alias("n").join(
@@ -532,17 +508,13 @@ def _dedup_merge_batch(
         pairs = within.unionByName(cross)
     else:
         pairs = within
-    pairs.distinct().write.mode("overwrite").parquet(
-        f"{state_root}/pairs/v{batch_id:05d}"
-    )
+    _write_snapshot(pairs.distinct(), f"{state_root}/pairs", batch_id)
     new_store = (
         store.unionByName(bands).distinct()
         if store is not None
         else bands
     )
-    new_store.write.mode("overwrite").parquet(
-        f"{state_root}/bands/v{batch_id:05d}"
-    )
+    _write_snapshot(new_store, f"{state_root}/bands", batch_id)
 
 
 def streaming_dedup_maintenance(
@@ -558,22 +530,11 @@ def streaming_dedup_maintenance(
     the batch path (llm.py's llm_dedup_minhash, whose banding
     function is shared so bucket spaces are identical).
 
-    Emitted pairs land in ``<state_root>/pairs/v{batch_id}``; the
-    band store snapshots under ``<state_root>/bands/v{batch_id}``
-    with predecessor-read retry idempotency. After draining a bounded
-    stream, the union of emitted pairs equals the batch
-    llm_dedup_minhash pair set (pinned in tests/test_streaming.py)."""
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda batch, batch_id: _dedup_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    Emitted pairs land in the ``<state_root>/pairs`` chain, the band
+    store in ``<state_root>/bands``. After draining a bounded stream,
+    the union of emitted pairs equals the batch llm_dedup_minhash pair
+    set (pinned in tests/test_streaming.py)."""
+    _drain(docs, checkpoint, _dedup_merge_batch, state_root)
 
 
 def _cdc_chunk_merge_batch(
@@ -581,15 +542,12 @@ def _cdc_chunk_merge_batch(
 ) -> None:
     """One micro-batch of continuous content-defined-chunk dedup
     maintenance: the batch's per-chunk partial (min length, distinct
-    docs, occurrences) merges additively into the PREDECESSOR
-    snapshot. Each document appears in exactly one micro-batch, so
-    per-batch COUNT(DISTINCT doc_id) sums to the corpus-wide distinct
-    count — the additivity that makes the merge exact. Module-level
-    for the crash-replay tests (same predecessor-read idempotency
-    argument as :func:`_cms_merge_batch`)."""
+    docs, occurrences) merges additively onto the predecessor. Each
+    document appears in exactly one micro-batch, so per-batch
+    COUNT(DISTINCT doc_id) sums to the corpus-wide distinct count —
+    the additivity that makes the merge exact."""
     from etl_geonames_spark.operators.curation import cdc_chunks
 
-    spark = batch.sparkSession
     partial = cdc_chunks(batch).groupBy(
         F.col("c.chash").alias("chunk_hash")
     ).agg(
@@ -597,19 +555,15 @@ def _cdc_chunk_merge_batch(
         F.countDistinct("doc_id").cast("long").alias("n_docs"),
         F.count(F.lit(1)).cast("long").alias("n_occ"),
     )
-    prev = _read_versioned(spark, state_root, batch_id)
-    if prev is not None:
-        partial = (
-            prev.unionByName(partial)
-            .groupBy("chunk_hash")
-            .agg(
-                F.min("chunk_len").cast("long").alias("chunk_len"),
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_occ").cast("long").alias("n_occ"),
-            )
-        )
-    partial.write.mode("overwrite").parquet(
-        f"{state_root}/v{batch_id:05d}"
+    _advance(
+        state_root,
+        batch_id,
+        partial,
+        lambda u: u.groupBy("chunk_hash").agg(
+            F.min("chunk_len").cast("long").alias("chunk_len"),
+            F.sum("n_docs").cast("long").alias("n_docs"),
+            F.sum("n_occ").cast("long").alias("n_occ"),
+        ),
     )
 
 
@@ -640,42 +594,23 @@ def streaming_cdc_chunk_maintenance(
     At 100 TB the snapshot is chunk-vocabulary-sized (not corpus-
     sized) and partitions by chunk hash; a batch only touches the
     hash partitions its chunks land in."""
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda batch, batch_id: _cdc_chunk_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs, checkpoint, _cdc_chunk_merge_batch, state_root)
 
 
 def _cms_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
     """One micro-batch of continuous CMS maintenance (see
-    :func:`streaming_cms_maintenance`). Module-level so the
-    crash-replay tests can re-invoke a batch_id directly: the merge
-    reads the PREDECESSOR snapshot, so a replayed batch rewrites
-    v{batch_id} from the same base instead of summing its own cells
-    on top of themselves (CMS counters are additive — a
-    latest-snapshot read would silently double every count)."""
+    :func:`streaming_cms_maintenance`): per-cell SUM onto the
+    predecessor. CMS counters are additive — a latest-snapshot read
+    would silently double every count a replayed batch touched."""
     from etl_geonames_spark.operators.reshape import cms_cells
 
-    spark = batch.sparkSession
-    partial = cms_cells(batch, "user_id")
-    prev = _read_versioned(spark, state_root, batch_id)
-    if prev is not None:
-        partial = (
-            prev.unionByName(partial)
-            .groupBy("i", "c")
-            .agg(F.sum("n").alias("n"))
-        )
-    partial.write.mode("overwrite").parquet(
-        f"{state_root}/v{batch_id:05d}"
+    _advance(
+        state_root,
+        batch_id,
+        cms_cells(batch, "user_id"),
+        lambda u: u.groupBy("i", "c").agg(F.sum("n").alias("n")),
     )
 
 
@@ -690,51 +625,24 @@ def streaming_cms_maintenance(
     cell (pinned in tests/test_streaming.py), unlike approximate
     merges there is no drift to bound.
 
-    Retry safety follows the rollup-maintenance rule: merge reads the
-    PREDECESSOR snapshot (strictly older than this batch_id), so a
-    replayed batch rewrites v{batch_id} from the same base instead of
-    double-counting itself.
-
     At 100 TB the snapshot is ≤ d·w rows — the whole point of
     sketches: per-key frequency queries over an unbounded stream in
     4 KB of mergeable state, no per-key state store at all."""
-    q = (
-        events.writeStream.foreachBatch(
-            lambda batch, batch_id: _cms_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events, checkpoint, _cms_merge_batch, state_root)
 
 
 def _kmv_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
-    """One micro-batch of KMV maintenance: bottom-k of (PREDECESSOR
+    """One micro-batch of KMV maintenance: bottom-k of (predecessor
     state ∪ batch members). Members dedupe before re-ranking, so a
     crash-window replay — and even a broken latest-read self-merge —
-    cannot corrupt the member SET; what the predecessor read protects
-    here is the versioning ledger, and what the crash-replay test
-    pins is that a merge which skips the re-rank (raw union append)
-    IS detected. Module-level for the crash-replay tests."""
+    cannot corrupt the member SET; what the crash-replay test pins is
+    that a merge which skips the re-rank (raw union append) IS
+    detected."""
     from etl_geonames_spark.operators.reshape import kmv_bottomk
 
-    spark = batch.sparkSession
-    partial = kmv_bottomk(batch)
-    prev = _read_versioned(spark, state_root, batch_id)
-    if prev is not None:
-        partial = kmv_bottomk(
-            prev.select("event_type", "user_id").unionByName(
-                partial.select("event_type", "user_id")
-            )
-        )
-    partial.write.mode("overwrite").parquet(
-        f"{state_root}/v{batch_id:05d}"
-    )
+    _advance(state_root, batch_id, kmv_bottomk(batch), kmv_bottomk)
 
 
 def streaming_kmv_maintenance(
@@ -751,52 +659,33 @@ def streaming_kmv_maintenance(
     EXACTLY (pinned in tests/test_streaming.py), the same
     no-drift-to-bound property as the CMS maintenance above.
 
-    Retry safety follows the rollup-maintenance rule: merge reads the
-    PREDECESSOR snapshot (strictly older than this batch_id), so a
-    replayed batch rewrites v{batch_id} from the same base.
-
     At 100 TB: state is ≤ |groups|·k rows forever — per-group distinct
     tracking over an unbounded stream with no per-member state store;
     estimates serve at any moment from the latest snapshot."""
-    q = (
-        events.writeStream.foreachBatch(
-            lambda batch, batch_id: _kmv_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events, checkpoint, _kmv_merge_batch, state_root)
 
 
 def _band_stats_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
     """One micro-batch of LSH bucket-census maintenance: per-bucket
-    ADDITIVE counts merge into the PREDECESSOR snapshot — a
-    latest-read merge would double every bucket the batch touched
-    (same counter-store failure mode as :func:`_cms_merge_batch`;
-    the crash-replay test proves the red case). Module-level for the
-    crash-replay tests."""
+    ADDITIVE counts sum onto the predecessor — a latest-read merge
+    would double every bucket the batch touched (the crash-replay test
+    proves the red case)."""
     from etl_geonames_spark.operators.llm import _poly_minhash_bands
 
-    spark = batch.sparkSession
     partial = (
         _poly_minhash_bands(batch)
         .groupBy("band", "b_lo", "b_hi")
         .agg(F.count(F.lit(1)).cast("long").alias("sz"))
     )
-    prev = _read_versioned(spark, state_root, batch_id)
-    if prev is not None:
-        partial = (
-            prev.unionByName(partial)
-            .groupBy("band", "b_lo", "b_hi")
-            .agg(F.sum("sz").cast("long").alias("sz"))
-        )
-    partial.write.mode("overwrite").parquet(
-        f"{state_root}/v{batch_id:05d}"
+    _advance(
+        state_root,
+        batch_id,
+        partial,
+        lambda u: u.groupBy("band", "b_lo", "b_hi").agg(
+            F.sum("sz").cast("long").alias("sz")
+        ),
     )
 
 
@@ -816,48 +705,28 @@ def streaming_band_stats_maintenance(
     spike WITHIN the batch that ingested it, before any dedup join
     is scheduled.
 
-    Retry safety follows the rollup-maintenance rule: merge reads the
-    PREDECESSOR snapshot (strictly older than this batch_id), so a
-    replayed batch rewrites v{batch_id} from the same base instead of
-    double-counting itself.
-
     At 100 TB the state is |buckets| rows (bounded by corpus/bucket
     granularity, heavy-tailed but census-sized) — the capacity
     planner's view of an unbounded ingest with no per-doc state."""
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda batch, batch_id: _band_stats_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs, checkpoint, _band_stats_merge_batch, state_root)
 
 
 def _hh_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
     """One micro-batch of heavy-hitters maintenance: per-(shard, word)
-    ADDITIVE counts merge into the PREDECESSOR snapshot — a
-    latest-read merge would double every count the batch touched
-    (counter-store failure mode; the crash-replay test proves the red
-    case). Module-level for the crash-replay tests."""
+    ADDITIVE counts sum onto the predecessor — a latest-read merge
+    would double every count the batch touched (the crash-replay test
+    proves the red case)."""
     from etl_geonames_spark.operators.reshape import hh_shard_counts
 
-    spark = batch.sparkSession
-    partial = hh_shard_counts(batch)
-    prev = _read_versioned(spark, state_root, batch_id)
-    if prev is not None:
-        partial = (
-            prev.unionByName(partial)
-            .groupBy("shard", "word")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-    partial.write.mode("overwrite").parquet(
-        f"{state_root}/v{batch_id:05d}"
+    _advance(
+        state_root,
+        batch_id,
+        hh_shard_counts(batch),
+        lambda u: u.groupBy("shard", "word").agg(
+            F.sum("cnt").cast("long").alias("cnt")
+        ),
     )
 
 
@@ -877,53 +746,32 @@ def streaming_hh_maintenance(
     the corpus streams in, and the [lower, upper] frequency
     certificate can be served at any moment from the latest snapshot.
 
-    Retry safety follows the rollup-maintenance rule: merge reads the
-    PREDECESSOR snapshot (strictly older than this batch_id), so a
-    replayed batch rewrites v{batch_id} from the same base instead of
-    double-counting itself.
-
     State size note, honestly: this maintains the FULL per-shard
     count table (|shards|·|vocab| rows) rather than only the top-k +
     bound — exact, but vocabulary-sized. A stricter-memory variant
     would keep k+1 rows per shard and pay a wider certificate; the
     full table is the right trade while vocab ≪ corpus (Heaps' law
     keeps it sublinear in tokens)."""
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda batch, batch_id: _hh_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs, checkpoint, _hh_merge_batch, state_root)
 
 
 def _bloom_merge_batch(
     batch: DataFrame, batch_id: int, state_root: str
 ) -> None:
     """One micro-batch of Bloom-signature maintenance: the batch's
-    signature ORs into the PREDECESSOR snapshot. OR is idempotent —
-    even a broken latest-read self-merge cannot corrupt THIS state
-    (the crash-replay test pins that algebraic property); what the
-    test's red case proves instead is that a merge which DROPS the
+    signature ORs into the predecessor. OR is idempotent — even a
+    broken latest-read self-merge cannot corrupt THIS state (the
+    crash-replay test pins that algebraic property); what the test's
+    red case proves instead is that a merge which DROPS the
     predecessor (losing earlier batches' bits → false negatives) is
-    detected. Module-level for the crash-replay tests."""
+    detected."""
     from etl_geonames_spark.operators.relational import bloom_signature
 
-    spark = batch.sparkSession
-    partial = bloom_signature(batch.select("doc_id"), "doc_id")
-    prev = _read_versioned(spark, state_root, batch_id)
-    if prev is not None:
-        partial = (
-            prev.unionByName(partial)
-            .groupBy("word")
-            .agg(F.bit_or("s").alias("s"))
-        )
-    partial.write.mode("overwrite").parquet(
-        f"{state_root}/v{batch_id:05d}"
+    _advance(
+        state_root,
+        batch_id,
+        bloom_signature(batch.select("doc_id"), "doc_id"),
+        lambda u: u.groupBy("word").agg(F.bit_or("s").alias("s")),
     )
 
 
@@ -946,27 +794,11 @@ def streaming_bloom_maintenance(
     (join_bloom_prefilter quantifies it) — pay the exact anti-join
     against the corpus-sized seen-keys table.
 
-    Retry safety follows the rollup-maintenance rule: merge reads the
-    PREDECESSOR snapshot (strictly older than this batch_id), so a
-    replayed batch re-ORs itself over the same base — and because OR
-    is idempotent, even a double-merge of the same batch could not
-    corrupt this particular state.
-
     At 100 TB the state is ≤ 32 rows FOREVER (size the bit width to
     the key cardinality in production; the geometry is one constant).
     The filter never forgets: deletions need a rebuild or a counting
     variant — documented, not implemented."""
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda batch, batch_id: _bloom_merge_batch(
-                batch, batch_id, state_root
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs, checkpoint, _bloom_merge_batch, state_root)
 
 
 def _semdedup_merge_batch(
@@ -979,12 +811,8 @@ def _semdedup_merge_batch(
     k-means refreshes it, streaming only reads it), L2-normalized
     with the batch path's clamped divisor, then (a) within-batch
     same-cell pairs with qround(dot) ≥ tau and (b) cross pairs
-    against the ACCUMULATED per-cell unit-vector store. Module-level
-    so the crash-replay tests can re-invoke a batch_id directly: both
-    the store read and the pair emission use the PREDECESSOR snapshot
-    (strictly older than batch_id), so a replayed batch rewrites both
-    outputs from the same base instead of pairing against its own
-    cells."""
+    against the predecessor per-cell unit-vector store, so a replay
+    never pairs the batch against its own cells."""
     from etl_geonames_spark.operators.llm import _as_double, kmeans_assign
 
     spark = batch.sparkSession
@@ -1037,7 +865,7 @@ def _semdedup_merge_batch(
             F.col("i").alias("vec_a"), F.col("j").alias("vec_b")
         )
     )
-    store = _read_versioned(spark, f"{state_root}/cells", batch_id)
+    store = read_upsert_state(spark, f"{state_root}/cells", before=batch_id)
     if store is not None:
         s = store.select(
             F.col("vec_id").alias("j"),
@@ -1056,17 +884,13 @@ def _semdedup_merge_batch(
         pairs = within.unionByName(cross)
     else:
         pairs = within
-    pairs.distinct().write.mode("overwrite").parquet(
-        f"{state_root}/pairs/v{batch_id:05d}"
-    )
+    _write_snapshot(pairs.distinct(), f"{state_root}/pairs", batch_id)
     new_store = (
         store.unionByName(cells).distinct()
         if store is not None
         else cells
     )
-    new_store.write.mode("overwrite").parquet(
-        f"{state_root}/cells/v{batch_id:05d}"
-    )
+    _write_snapshot(new_store, f"{state_root}/cells", batch_id)
 
 
 def streaming_semdedup_maintenance(
@@ -1087,10 +911,9 @@ def streaming_semdedup_maintenance(
     gracefully, never correctness of emitted pairs), L2-normalized
     once, then joined for candidate pairs within its cell only:
     within-batch and against the accumulated per-cell unit-vector
-    store. Pairs with qround(cos) ≥ tau land in
-    ``<state_root>/pairs/v{batch_id}``; the store snapshots under
-    ``<state_root>/cells/v{batch_id}`` with predecessor-read retry
-    idempotency (the streaming_dedup_maintenance convention).
+    store. Pairs with qround(cos) ≥ tau land in the
+    ``<state_root>/pairs`` chain, the store in ``<state_root>/cells``
+    (the streaming_dedup_maintenance layout).
 
     Drained ≡ batch: after draining a bounded stream, the union of
     emitted pairs equals the batch within-cell τ-pair set over the
@@ -1105,14 +928,6 @@ def streaming_semdedup_maintenance(
     same Σ|cell|² blocking bill as the batch path, paid
     incrementally. Store compaction (rewriting cells/v* into a
     bucketed table) is the llm_dedup_incremental maintenance story."""
-    q = (
-        emb.writeStream.foreachBatch(
-            lambda batch, batch_id: _semdedup_merge_batch(
-                batch, batch_id, state_root, cents_path, tau
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        emb, checkpoint, _semdedup_merge_batch, state_root, cents_path, tau
     )
-    q.awaitTermination()

@@ -407,6 +407,79 @@ def test_streaming_rollup_retry_is_idempotent(spark, sf_dir, tmp_path):
     assert v0.agg(F.sum("n_events")).collect()[0][0] == b0.count()
 
 
+def test_snapshot_versions_order_numerically_past_five_digits(
+    spark, tmp_path
+):
+    """Snapshot names are zero-padded to five digits, so v100000 sorts
+    BEFORE v99999 as a string. Every read of the chain must order
+    versions as numbers: latest, the predecessor of the next batch, AS
+    OF, and the merge of batch 100001 (which must land on v100000's
+    counts, not v99999's — a stale predecessor drops batch 100000 from
+    the state forever)."""
+    import datetime
+
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _rollup_merge_batch
+
+    state = str(tmp_path / "state")
+    hour = datetime.datetime(2024, 1, 1, 10)
+    schema = "hour timestamp, event_type string, n_events long, sum_value double"
+    for version, n in ((99999, 1), (100000, 2)):
+        spark.createDataFrame([(hour, "click", n, float(n))], schema).write.parquet(
+            f"{state}/v{version:05d}"
+        )
+
+    def n_events(df):
+        return [r["n_events"] for r in df.collect()]
+
+    assert n_events(read_upsert_state(spark, state)) == [2]
+    assert n_events(read_upsert_state(spark, state, before=100001)) == [2]
+    assert n_events(read_upsert_state(spark, state, before=100000)) == [1]
+    assert n_events(read_upsert_state(spark, state, version=100000)) == [2]
+    assert n_events(read_upsert_state(spark, state, version=99999)) == [1]
+
+    b = spark.createDataFrame(
+        [(hour.replace(minute=30), "click", 5.0)],
+        "ts timestamp, event_type string, value double",
+    )
+    _rollup_merge_batch(b, 100001, state)
+    merged = read_upsert_state(spark, state, version=100001).collect()
+    assert [(r["n_events"], r["sum_value"]) for r in merged] == [(3, 7.0)]
+    assert n_events(read_upsert_state(spark, state)) == [3]
+
+
+def test_streaming_upsert_crash_replay_equals_single_run(
+    spark, sf_dir, tmp_path
+):
+    """Crash-window replay for the upsert: batch 1 replayed after its
+    v00001 write but before the checkpoint commit must leave the same
+    state as a single run — keep-latest per user over both batches."""
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import (
+        _keep_latest,
+        _upsert_merge_batch,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    b0 = ev.filter(F.col("event_id") % 2 == 0)
+    b1 = ev.filter(F.col("event_id") % 2 == 1)
+    state = str(tmp_path / "state")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    _upsert_merge_batch(b0, 0, state)
+    _upsert_merge_batch(b1, 1, state)
+    once = rows(read_upsert_state(spark, state))
+    _upsert_merge_batch(b1, 1, state)  # crash-window replay
+    assert rows(read_upsert_state(spark, state)) == once
+    assert once == rows(_keep_latest(ev))
+    # the replay rewrote v00001 only: v00000 still holds batch 0 alone
+    assert rows(read_upsert_state(spark, state, version=0)) == rows(
+        _keep_latest(b0)
+    )
+
+
 def test_streaming_media_decode_equals_batch(spark, tmp_path):
     """Multimodal under Structured Streaming: a stream of binary image
     blobs (Parquet binary column) decoded by the REAL codec inside
@@ -489,13 +562,13 @@ def test_streaming_index_maintenance_equals_batch(spark, sf_dir, tmp_path):
     """Incrementally maintained inverted index == the batch index
     after draining the corpus in waves."""
     from etl_geonames_spark.streaming import streaming_index_maintenance
-    from etl_geonames_spark.streaming.pipeline import _read_versioned
+    from etl_geonames_spark.streaming import read_upsert_state
 
     stream, docs = _two_wave_docs_stream(spark, sf_dir, tmp_path)
     state = str(tmp_path / "index_state")
     streaming_index_maintenance(stream, state, str(tmp_path / "ckpt"))
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {
         r["word"]: (r["df"], list(r["postings"])) for r in final.collect()
     }
@@ -541,13 +614,13 @@ def test_streaming_cms_maintenance_equals_batch(spark, sf_dir, tmp_path):
         read_events_stream,
         streaming_cms_maintenance,
     )
-    from etl_geonames_spark.streaming.pipeline import _read_versioned
+    from etl_geonames_spark.streaming import read_upsert_state
 
     stream = read_events_stream(spark, sf_dir).select("user_id")
     state = str(tmp_path / "cms_state")
     streaming_cms_maintenance(stream, state, str(tmp_path / "ckpt"))
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {(r["i"], r["c"]): r["n"] for r in final.collect()}
     batch = cms_cells(
         load_table(spark, sf_dir, "events").select("user_id"), "user_id"
@@ -565,10 +638,8 @@ def test_streaming_cms_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     batch's own output) must double-count, proving this test detects
     the failure mode it guards (VERDICT r6 item 6)."""
     from etl_geonames_spark.operators.reshape import cms_cells
-    from etl_geonames_spark.streaming.pipeline import (
-        _cms_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _cms_merge_batch
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
     b0 = ev.filter(F.col("user_id") % 2 == 0)
@@ -582,7 +653,7 @@ def test_streaming_cms_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     _cms_merge_batch(b1, 1, state)
     got = {
         (r["i"], r["c"]): r["n"]
-        for r in _read_versioned(spark, state, before=10**6).collect()
+        for r in read_upsert_state(spark, state).collect()
     }
     want = {(r["i"], r["c"]): r["n"] for r in cms_cells(ev, "user_id").collect()}
     assert got == want and len(want) > 0
@@ -591,7 +662,7 @@ def test_streaming_cms_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     # the LATEST snapshot (its own v00001 output) — additive counters
     # double-count, so the totals must differ from the correct state
     broken = (
-        _read_versioned(spark, state, before=10**6)
+        read_upsert_state(spark, state)
         .unionByName(cms_cells(b1, "user_id"))
         .groupBy("i", "c")
         .agg(F.sum("n").alias("n"))
@@ -613,10 +684,8 @@ def test_streaming_dedup_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     would not be — this pins the ordering contract for both)."""
     import __spark_entry__ as entry_mod
 
-    from etl_geonames_spark.streaming.pipeline import (
-        _dedup_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _dedup_merge_batch
 
     docs = load_table(spark, sf_dir, "documents")
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
@@ -641,7 +710,7 @@ def test_streaming_dedup_crash_replay_equals_batch(spark, sf_dir, tmp_path):
         minhash_signatures,
     )
 
-    store = _read_versioned(spark, f"{state}/bands", before=10**6)
+    store = read_upsert_state(spark, f"{state}/bands")
     assert store.count() == minhash_bands(minhash_signatures(docs)).count()
 
 
@@ -656,7 +725,7 @@ def test_streaming_kmv_maintenance_equals_batch(spark, sf_dir, tmp_path):
         read_events_stream,
         streaming_kmv_maintenance,
     )
-    from etl_geonames_spark.streaming.pipeline import _read_versioned
+    from etl_geonames_spark.streaming import read_upsert_state
     import __spark_entry__ as entry_mod
 
     stream = read_events_stream(spark, sf_dir).select(
@@ -665,7 +734,7 @@ def test_streaming_kmv_maintenance_equals_batch(spark, sf_dir, tmp_path):
     state = str(tmp_path / "kmv_state")
     streaming_kmv_maintenance(stream, state, str(tmp_path / "ckpt"))
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {
         r["event_type"]: (r["kth_hash"], round(r["est_distinct"], 6))
         for r in kmv_estimate(final).collect()
@@ -690,7 +759,7 @@ def test_streaming_band_stats_maintenance_equals_batch(
     from etl_geonames_spark.streaming import (
         streaming_band_stats_maintenance,
     )
-    from etl_geonames_spark.streaming.pipeline import _read_versioned
+    from etl_geonames_spark.streaming import read_upsert_state
 
     stream, docs = _two_wave_docs_stream(spark, sf_dir, tmp_path)
     state = str(tmp_path / "band_state")
@@ -698,7 +767,7 @@ def test_streaming_band_stats_maintenance_equals_batch(
         stream, state, str(tmp_path / "band_ckpt")
     )
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     census = (
         final.groupBy(F.col("band").cast("int").alias("band"))
         .agg(
@@ -732,13 +801,13 @@ def test_streaming_hh_maintenance_equals_batch(spark, sf_dir, tmp_path):
     derived certificate matches row-for-row)."""
     from etl_geonames_spark.operators.reshape import hh_certificate
     from etl_geonames_spark.streaming import streaming_hh_maintenance
-    from etl_geonames_spark.streaming.pipeline import _read_versioned
+    from etl_geonames_spark.streaming import read_upsert_state
 
     stream, docs = _two_wave_docs_stream(spark, sf_dir, tmp_path)
     state = str(tmp_path / "hh_state")
     streaming_hh_maintenance(stream, state, str(tmp_path / "hh_ckpt"))
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {tuple(r) for r in hh_certificate(final).collect()}
     import __spark_entry__ as entry_mod
 
@@ -762,13 +831,13 @@ def test_streaming_bloom_maintenance_equals_batch(spark, sf_dir, tmp_path):
         bloom_signature,
     )
     from etl_geonames_spark.streaming import streaming_bloom_maintenance
-    from etl_geonames_spark.streaming.pipeline import _read_versioned
+    from etl_geonames_spark.streaming import read_upsert_state
 
     stream, docs = _two_wave_docs_stream(spark, sf_dir, tmp_path)
     state = str(tmp_path / "bloom_state")
     streaming_bloom_maintenance(stream, state, str(tmp_path / "bloom_ckpt"))
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {(r["word"], r["s"]) for r in final.collect()}
     want = {
         (r["word"], r["s"])
@@ -800,13 +869,13 @@ def test_streaming_cdc_chunk_maintenance_equals_batch(
     from etl_geonames_spark.streaming import (
         streaming_cdc_chunk_maintenance,
     )
-    from etl_geonames_spark.streaming.pipeline import _read_versioned
+    from etl_geonames_spark.streaming import read_upsert_state
 
     stream, docs = _two_wave_docs_stream(spark, sf_dir, tmp_path)
     state = str(tmp_path / "cdc_state")
     streaming_cdc_chunk_maintenance(stream, state, str(tmp_path / "ckpt"))
 
-    final = _read_versioned(spark, state, before=10**6).filter(
+    final = read_upsert_state(spark, state).filter(
         F.col("n_docs") >= 2
     )
     got = {
@@ -825,10 +894,8 @@ def test_streaming_cdc_chunk_crash_replay(spark, sf_dir, tmp_path):
     """Batch 1 replayed after its snapshot write but before the
     checkpoint commit leaves the CDC chunk census identical — the
     additive merge reads the predecessor, never its own output."""
-    from etl_geonames_spark.streaming.pipeline import (
-        _cdc_chunk_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _cdc_chunk_merge_batch
 
     docs = load_table(spark, sf_dir, "documents")
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
@@ -838,12 +905,12 @@ def test_streaming_cdc_chunk_crash_replay(spark, sf_dir, tmp_path):
     _cdc_chunk_merge_batch(b1, 1, state)
     once = {
         r["chunk_hash"]: (r["chunk_len"], r["n_docs"], r["n_occ"])
-        for r in _read_versioned(spark, state, before=10**6).collect()
+        for r in read_upsert_state(spark, state).collect()
     }
     _cdc_chunk_merge_batch(b1, 1, state)  # crash-window replay
     retried = {
         r["chunk_hash"]: (r["chunk_len"], r["n_docs"], r["n_occ"])
-        for r in _read_versioned(spark, state, before=10**6).collect()
+        for r in read_upsert_state(spark, state).collect()
     }
     assert retried == once
 
@@ -858,10 +925,8 @@ def test_streaming_kmv_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     test detects a wrong merge even though set algebra forgives the
     replay itself."""
     from etl_geonames_spark.operators.reshape import kmv_bottomk, kmv_estimate
-    from etl_geonames_spark.streaming.pipeline import (
-        _kmv_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _kmv_merge_batch
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     b0 = ev.filter(F.col("user_id") % 2 == 0)
@@ -872,7 +937,7 @@ def test_streaming_kmv_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     _kmv_merge_batch(b1, 1, state)
     _kmv_merge_batch(b1, 1, state)  # crash-window replay, same batch_id
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {
         r["event_type"]: (r["kth_hash"], round(r["est_distinct"], 6))
         for r in kmv_estimate(final).collect()
@@ -905,10 +970,8 @@ def test_streaming_hh_crash_replay_equals_batch(spark, sf_dir, tmp_path):
         hh_certificate,
         hh_shard_counts,
     )
-    from etl_geonames_spark.streaming.pipeline import (
-        _hh_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _hh_merge_batch
 
     docs = load_table(spark, sf_dir, "documents")
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
@@ -919,7 +982,7 @@ def test_streaming_hh_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     _hh_merge_batch(b1, 1, state)
     _hh_merge_batch(b1, 1, state)  # crash-window replay
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {tuple(r) for r in hh_certificate(final).collect()}
     want = {tuple(r) for r in hh_certificate(hh_shard_counts(docs)).collect()}
     assert got == want and len(want) > 0
@@ -942,10 +1005,8 @@ def test_streaming_band_stats_crash_replay_equals_batch(
     build; the broken latest-read merge double-counts every bucket
     batch 1 touched (red case)."""
     from etl_geonames_spark.operators.llm import _poly_minhash_bands
-    from etl_geonames_spark.streaming.pipeline import (
-        _band_stats_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _band_stats_merge_batch
 
     docs = load_table(spark, sf_dir, "documents")
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
@@ -956,7 +1017,7 @@ def test_streaming_band_stats_crash_replay_equals_batch(
     _band_stats_merge_batch(b1, 1, state)
     _band_stats_merge_batch(b1, 1, state)  # crash-window replay
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {
         (r["band"], r["b_lo"], r["b_hi"]): r["sz"] for r in final.collect()
     }
@@ -991,10 +1052,8 @@ def test_streaming_bloom_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     without merging drops earlier batches' bits and introduces false
     negatives, which the equality check detects."""
     from etl_geonames_spark.operators.relational import bloom_signature
-    from etl_geonames_spark.streaming.pipeline import (
-        _bloom_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _bloom_merge_batch
 
     docs = load_table(spark, sf_dir, "documents")
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
@@ -1005,7 +1064,7 @@ def test_streaming_bloom_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     _bloom_merge_batch(b1, 1, state)
     _bloom_merge_batch(b1, 1, state)  # crash-window replay
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {(r["word"], r["s"]) for r in final.collect()}
     want = {
         (r["word"], r["s"])
@@ -1044,10 +1103,8 @@ def test_streaming_index_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     luck) is what makes the replay idempotent."""
     import __spark_entry__ as entry_mod
 
-    from etl_geonames_spark.streaming.pipeline import (
-        _index_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _index_merge_batch
 
     docs = load_table(spark, sf_dir, "documents")
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
@@ -1058,7 +1115,7 @@ def test_streaming_index_crash_replay_equals_batch(spark, sf_dir, tmp_path):
     _index_merge_batch(b1, 1, state)
     _index_merge_batch(b1, 1, state)  # crash-window replay
 
-    final = _read_versioned(spark, state, before=10**6)
+    final = read_upsert_state(spark, state)
     got = {r["word"]: (r["df"], list(r["postings"])) for r in final.collect()}
     batch = entry_mod.queries()["llm_inverted_index"](spark, sf_dir)
     want = {
@@ -1131,10 +1188,8 @@ def test_streaming_cdc_chunk_broken_commit_order_is_red(
     occurrence counts — detectable, so the green replay test is
     meaningful."""
     from etl_geonames_spark.operators.curation import cdc_chunks
-    from etl_geonames_spark.streaming.pipeline import (
-        _cdc_chunk_merge_batch,
-        _read_versioned,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _cdc_chunk_merge_batch
 
     docs = load_table(spark, sf_dir, "documents")
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
@@ -1143,7 +1198,7 @@ def test_streaming_cdc_chunk_broken_commit_order_is_red(
     _cdc_chunk_merge_batch(b0, 0, state)
     _cdc_chunk_merge_batch(b1, 1, state)
 
-    cur = _read_versioned(spark, state, before=10**6)
+    cur = read_upsert_state(spark, state)
     correct_occ = cur.agg(F.sum("n_occ")).collect()[0][0]
     b1_partial = cdc_chunks(b1).groupBy(
         F.col("c.chash").alias("chunk_hash")
@@ -1269,10 +1324,8 @@ def test_streaming_semdedup_crash_replay_equals_batch(
     equal to the batch pair set, and the cell store must hold each
     vector exactly once (the predecessor read prevents the replayed
     batch from pairing against its own cells)."""
-    from etl_geonames_spark.streaming.pipeline import (
-        _read_versioned,
-        _semdedup_merge_batch,
-    )
+    from etl_geonames_spark.streaming import read_upsert_state
+    from etl_geonames_spark.streaming.pipeline import _semdedup_merge_batch
 
     cents_path, emb, want = _semdedup_fixture(spark, sf_dir, tmp_path)
     b0 = emb.filter(F.col("vec_id") % 2 == 0)
@@ -1287,5 +1340,5 @@ def test_streaming_semdedup_crash_replay_equals_batch(
     pairs = spark.read.parquet(f"{state}/pairs/v*")
     got = {(r["vec_a"], r["vec_b"]) for r in pairs.collect()}
     assert got == want
-    store = _read_versioned(spark, f"{state}/cells", before=10**6)
+    store = read_upsert_state(spark, f"{state}/cells")
     assert store.count() == emb.count()
