@@ -21,7 +21,7 @@ Config keys (all optional except where noted):
   - ``envelope``: if true, additionally write the reference's
     interleaved ``{type, obj}`` stream: byte-identical to the job's own
     ``pits``/``relations`` lines, structurally equal to the reference's
-    stream (see :func:`~etl_geonames_spark.geonames.tagged_envelope`).
+    stream (see :func:`~etl_geonames_spark.geonames.envelope_lines`).
 
 Steps (mirroring geonames.js):
   1. download: fetch allCountries.zip + admin TSVs, unzip (driver-side).
@@ -44,7 +44,7 @@ from pyspark.sql import Observation, SparkSession
 from etl_geonames_spark.geonames.pipeline import (
     GeonamesConfig,
     envelope_lines,
-    output_lines_from_paths,
+    transform_from_paths,
 )
 from etl_geonames_spark.ingest import BASE_URL, download
 from etl_geonames_spark.sources.sinks import write_lines_by_kind, write_ndjson_lines
@@ -55,14 +55,28 @@ def load_config(path: str) -> dict:
         return json.load(f)
 
 
+def _list_of(value, kind: type, what: str):
+    """``value`` when it is a list of ``kind``; a ``ValueError`` naming
+    ``what`` otherwise (a string or an object would iterate as characters
+    or keys and silently filter the wrong rows)."""
+    if not isinstance(value, list) or not all(isinstance(v, kind) for v in value):
+        noun = {str: "strings", dict: "objects"}[kind]
+        raise ValueError(f"{what} must be a JSON array of {noun}, got {value!r}")
+    return value
+
+
 def config_to_pipeline(cfg: dict) -> GeonamesConfig:
+    countries = _list_of(cfg.get("countries", []), str, "countries")
     filters = cfg.get("filters")
     if filters is None:
-        filters = [{"countryCode": c} for c in cfg.get("countries", [])]
+        filters = [{"countryCode": c} for c in countries]
+    _list_of(filters, dict, "filters")
     extra_uris: list[str] = []
     if cfg.get("extraUris"):
         with open(cfg["extraUris"]) as f:
-            extra_uris = json.load(f)
+            extra_uris = _list_of(
+                json.load(f), str, f"extraUris file {cfg['extraUris']}"
+            )
     return GeonamesConfig(
         types=cfg.get("types", {}),
         filters=filters,
@@ -118,7 +132,7 @@ def transform_step(cfg: dict, work_dir: str, spark: SparkSession) -> None:
     landed = os.path.join(work_dir, "landed")
     out = os.path.join(work_dir, "out")
     counts = Observation()
-    lines = output_lines_from_paths(
+    lines = transform_from_paths(
         spark,
         os.path.join(landed, "allCountries.txt"),
         os.path.join(landed, "admin1CodesASCII.txt"),

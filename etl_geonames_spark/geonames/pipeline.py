@@ -5,8 +5,8 @@ Reference dataflow (geonames.js:223-254): scan TSV → parse → filter
 resolution → drop untyped → broadcast-probe admin2/admin1 for parent →
 emit PIT nodes + liesIn edges as NDJSON.
 
-The job declares the same dataflow as one logical plan over one scan
-of the dump (:func:`output_lines`): each typed row becomes a pit line
+The transform is declared once, as one logical plan over one scan of
+the dump (:func:`output_lines`): each typed row becomes a pit line
 and, when it has 3 admin codes, a relation row, as the reference's
 flatMap does, and one partitioned write lands both outputs. Catalyst
 picks the physical strategy. All lookups (admin1, admin2, type map,
@@ -14,8 +14,8 @@ allowlist) are broadcast-shaped: the fact table scales to 100 TB, the
 dimensions stay in the tens of MB, so the whole pipeline runs
 shuffle-free — scan → broadcast existence join (allowlist) → codegen'd
 filter/project → generate → two broadcast hash joins → sink.
-:func:`build_pits` and :func:`build_relations` return the same outputs
-as two typed DataFrames, from the same column definitions.
+:func:`build_pits` projects the same PIT documents as typed rows, for
+the streaming form of the pipeline.
 
 Documented divergences from the reference (all deliberate):
   - join-miss on the admin2 probe *crashes* the reference
@@ -23,7 +23,7 @@ Documented divergences from the reference (all deliberate):
     engine defaults to dropping the relation, with drop counts
     observable on the same action (``observation=``) and the
     reference's fail-fast behavior available via ``on_miss="fail"``
-    (see :func:`build_relations`).
+    (see :func:`output_lines`).
   - parseFloat('garbage') yields NaN (serialized as null); the engine
     uses try_cast → null. Identical for well-formed input.
   - the reference writes one interleaved NDJSON stream of
@@ -32,7 +32,9 @@ Documented divergences from the reference (all deliberate):
     ``relations``; :func:`envelope_lines` frames their lines as the
     envelope stream, byte-identical to the engine's own lines and
     structurally equal to the reference's (parsed-object parity, not
-    byte parity).
+    byte parity: Spark's ``to_json`` writes integral doubles as ``52.0``
+    where JS ``JSON.stringify`` writes ``52``, and omits null fields
+    where JS writes ``null``).
 """
 
 from __future__ import annotations
@@ -194,14 +196,12 @@ def _codes_array() -> Column:
     return F.filter(arr, lambda x: x != "")
 
 
-def with_resolved_type(df: DataFrame, config: GeonamesConfig) -> DataFrame:
-    """Attach the longest-prefix-matched ``type`` column; keep all rows."""
-    return df.withColumn("type", resolve_type(F.col("featureCode"), config.types))
-
-
 def _typed(df: DataFrame, config: GeonamesConfig) -> DataFrame:
-    """Typed rows only: untyped rows emit nothing (geonames.js:175-177)."""
-    return with_resolved_type(df, config).filter(F.col("type").isNotNull())
+    """Typed rows only, with their longest-prefix-matched ``type``:
+    untyped rows emit nothing (geonames.js:175-177)."""
+    return df.withColumn(
+        "type", resolve_type(F.col("featureCode"), config.types)
+    ).filter(F.col("type").isNotNull())
 
 
 def _pit_columns(config: GeonamesConfig) -> list[Column]:
@@ -273,18 +273,20 @@ def _miss_counts() -> list[Column]:
     ]
 
 
-def _parent_id(on_miss: str = "drop") -> Column:
+def _parent_id(on_miss: str) -> Column:
     """The parent geonameid over a joined row (geonames.js:105-109): the
     admin2 row, or the admin1 row when the row is its own admin2 parent.
-    ``"drop"`` leaves it null on a probe miss; ``"fail"`` raises instead,
-    naming the offending key."""
+    ``"drop"`` leaves it null on a probe miss; ``"fail"`` raises instead
+    on a relations row, naming the offending key (a pit row has no keys,
+    so no parent, and never raises)."""
     self_parent = F.col("geonameid") == F.col("_a2_id")
     if on_miss == "drop":
         return F.when(self_parent, F.col("_a1_id")).otherwise(F.col("_a2_id"))
     fail = lambda dim, key: F.raise_error(  # noqa: E731
         F.concat(F.lit(f"{dim} probe miss for key "), F.col(key))
     ).cast("string")
-    return (
+    return F.when(
+        F.col("kind") == "relations",
         F.when(F.col("_a2_id").isNull(), fail("admin2", "_key3"))
         .when(
             self_parent,
@@ -292,7 +294,7 @@ def _parent_id(on_miss: str = "drop") -> Column:
                 F.col("_a1_id")
             ),
         )
-        .otherwise(F.col("_a2_id"))
+        .otherwise(F.col("_a2_id")),
     )
 
 
@@ -315,117 +317,48 @@ def build_pits(df: DataFrame, config: GeonamesConfig) -> DataFrame:
     return _typed(df, config).select(*_pit_columns(config))
 
 
-def build_relations(
-    df: DataFrame,
-    admin1: DataFrame,
-    admin2: DataFrame,
-    config: GeonamesConfig,
-    on_miss: str = "drop",
-    observation=None,
-) -> DataFrame:
-    """Derive liesIn edges via broadcast lookups (geonames.js:100-123).
-
-    Semantics preserved:
-      - only typed rows participate (relations are emitted from the
-        same branch as PITs, geonames.js:165);
-      - only rows with **exactly 3** non-empty admin codes emit an
-        edge (geonames.js:104);
-      - the parent is the admin2 row keyed by ``codes.join('.')``
-        (geonames.js:105); if the row *is* its own admin2 parent, the
-        parent is re-resolved from admin1 on the 2-part key
-        (geonames.js:107-109);
-      - no admin1 → country edges (the reference's TODO at
-        geonames.js:120 is intentionally unimplemented).
-
-    Join-miss handling (``on_miss``):
-      - ``"drop"`` (default): a probe miss drops the relation — the
-        engine's documented divergence from the reference, which
-        *crashes* (``parentObj.geonameid`` on undefined,
-        geonames.js:105-107). Pass a :class:`pyspark.sql.Observation`
-        as ``observation`` to have the drop counts recorded on the
-        same action (metrics ``a2_misses``, ``a1_misses``,
-        ``gated_rows``) — a CollectMetrics node in the plan, zero
-        extra passes over the data.
-      - ``"fail"``: restore the reference's strictness — the first
-        probe miss raises (executor-side ``raise_error`` expression
-        naming the offending key), failing the job exactly where the
-        reference would crash. No extra pass, no driver round-trip.
-
-    Both dimension joins are broadcasts (:func:`_join_admins`).
-    """
-    if on_miss not in ("drop", "fail"):
-        raise ValueError(f"on_miss must be 'drop' or 'fail', got {on_miss!r}")
-    key3, key2 = _admin_keys()
-    gated = (
-        _typed(df, config)
-        .withColumn("_codes", _codes_array())
-        .filter(F.size("_codes") == 3)
-        .withColumn("_key3", key3)
-        .withColumn("_key2", key2)
-    )
-    joined = _join_admins(gated, admin1, admin2)
-    if observation is not None:
-        joined = joined.observe(
-            observation, *_miss_counts(), F.count(F.lit(1)).alias("gated_rows")
-        )
-    resolved = joined.withColumn("_parent_id", _parent_id(on_miss)).filter(
-        F.col("_parent_id").isNotNull()
-    )
-    return resolved.select(*_relation_columns(config, F.col("_parent_id")))
-
-
-def _filtered(df: DataFrame, config: GeonamesConfig) -> DataFrame:
-    return df.filter(filters_predicate(config.filters, config.extra_ids()))
-
-
-def run_pipeline(
-    df: DataFrame,
-    admin1: DataFrame,
-    admin2: DataFrame,
-    config: GeonamesConfig,
-    on_miss: str = "drop",
-    observation=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Full transform step (geonames.js:223-254): filter → (pits, relations).
-
-    ``on_miss`` / ``observation`` configure join-miss strictness and
-    drop accounting for the relations branch — see
-    :func:`build_relations`."""
-    filtered = _filtered(df, config)
-    return (
-        build_pits(filtered, config),
-        build_relations(
-            filtered, admin1, admin2, config, on_miss=on_miss,
-            observation=observation,
-        ),
-    )
-
-
 def output_lines(
     df: DataFrame,
     admin1: DataFrame,
     admin2: DataFrame,
     config: GeonamesConfig,
+    on_miss: str = "drop",
     observation=None,
 ) -> DataFrame:
-    """Both outputs of the transform step from one pass over ``df``: a
-    ``(kind, value)`` DataFrame whose ``value`` is a finished NDJSON line,
-    ``kind`` ``"pits"`` or ``"relations"`` — the reference's flatMap of
-    one streamed row into a PIT and its liesIn edge (geonames.js:160-170).
+    """The transform step (geonames.js:223-254) from one pass over ``df``:
+    a ``(kind, value)`` DataFrame whose ``value`` is a finished NDJSON
+    line, ``kind`` ``"pits"`` or ``"relations"`` — the reference's flatMap
+    of one streamed row into a PIT and its liesIn edge
+    (geonames.js:160-170).
 
     Filter, then typing, then each typed row becomes a pit row carrying
-    ``to_json`` of :func:`build_pits`'s document and, when it has exactly
-    3 admin codes, a relations row carrying its admin keys. Only then are
-    the dims joined (:func:`_join_admins`): pit rows have null keys and
-    never match, so a duplicated dim code multiplies relations (as
-    :func:`build_relations` does) and never pits. A relation's line is
-    ``to_json`` of :func:`build_relations`'s edge; a probe miss drops it.
-    The lines equal ``to_json`` of the two builders' rows, which is what
-    the JSON sink writes.
+    ``to_json`` of :func:`build_pits`'s document and, when it has
+    **exactly 3** non-empty admin codes (geonames.js:104), a relations
+    row carrying its admin keys. Only then are the dims joined
+    (:func:`_join_admins`): pit rows have null keys and never match, so
+    a duplicated dim code multiplies relations and never pits. The
+    parent is the admin2 row keyed by ``codes.join('.')``
+    (geonames.js:105); a row that *is* its own admin2 parent takes the
+    admin1 row of its first two codes (geonames.js:107-109). No admin1 →
+    country edges (the reference's TODO at geonames.js:120 is
+    intentionally unimplemented). A relation's line is ``to_json`` of
+    its ``{from, to, type}`` edge. Every line is what the JSON sink
+    writes for the same row.
+
+    Join-miss handling (``on_miss``):
+      - ``"drop"`` (default): a probe miss drops the relation — the
+        engine's documented divergence from the reference, which
+        *crashes* (``parentObj.geonameid`` on undefined,
+        geonames.js:105-107).
+      - ``"fail"``: the first probe miss raises (executor-side
+        ``raise_error`` naming the offending key), failing the job
+        where the reference would crash. No extra pass.
 
     Pass a :class:`pyspark.sql.Observation` as ``observation`` to count
     ``pits``, ``relations``, ``a2_misses`` and ``a1_misses`` on the same
     action (one CollectMetrics node, no extra pass)."""
+    if on_miss not in ("drop", "fail"):
+        raise ValueError(f"on_miss must be 'drop' or 'fail', got {on_miss!r}")
     none = F.lit(None).cast("string")
     key3, key2 = _admin_keys()
     pit = F.struct(
@@ -440,8 +373,9 @@ def output_lines(
         key3.alias("_key3"),
         key2.alias("_key2"),
     )
+    kept = df.filter(filters_predicate(config.filters, config.extra_ids()))
     rows = (
-        _typed(_filtered(df, config), config)
+        _typed(kept, config)
         .withColumn("_codes", _codes_array())
         .select(
             "geonameid",
@@ -450,7 +384,9 @@ def output_lines(
             ),
         )
     )
-    joined = _join_admins(rows, admin1, admin2).withColumn("_parent_id", _parent_id())
+    joined = _join_admins(rows, admin1, admin2).withColumn(
+        "_parent_id", _parent_id(on_miss)
+    )
     relation = F.col("_parent_id").isNotNull()
     if observation is not None:
         joined = joined.observe(
@@ -488,58 +424,23 @@ def envelope_lines(pit_lines: DataFrame, rel_lines: DataFrame) -> DataFrame:
     return wrap(pit_lines, "pit").unionByName(wrap(rel_lines, "relation"))
 
 
-def tagged_envelope(pits: DataFrame, relations: DataFrame) -> DataFrame:
-    """:func:`envelope_lines` over ``to_json`` of each row — the same
-    lines the JSON sink writes. Against the reference this is
-    *structural* parity (same keys, same nesting, same values), not
-    byte parity: Spark's to_json serializes integral doubles as
-    ``52.0`` where JS JSON.stringify emits ``52``, and omits null struct
-    fields where JS emits ``null``. Consumers should compare parsed
-    objects, which is what tests/test_geonames_parity.py pins."""
-    return envelope_lines(
-        pits.select(F.to_json(F.struct("*")).alias("json")),
-        relations.select(F.to_json(F.struct("*")).alias("json")),
-    )
-
-
-def _read_paths(
-    spark: SparkSession, all_countries_path: str, admin1_path: str, admin2_path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    from etl_geonames_spark.sources.tsv import read_admin_codes, read_all_countries
-
-    return (
-        read_all_countries(spark, all_countries_path),
-        read_admin_codes(spark, admin1_path),
-        read_admin_codes(spark, admin2_path),
-    )
-
-
 def transform_from_paths(
     spark: SparkSession,
     all_countries_path: str,
     admin1_path: str,
     admin2_path: str,
     config: GeonamesConfig,
-) -> tuple[DataFrame, DataFrame]:
-    """Path-level entry mirroring the reference's transform step
-    signature (geonames.js:223): reads the three TSVs and runs the
-    pipeline."""
-    return run_pipeline(
-        *_read_paths(spark, all_countries_path, admin1_path, admin2_path), config
-    )
-
-
-def output_lines_from_paths(
-    spark: SparkSession,
-    all_countries_path: str,
-    admin1_path: str,
-    admin2_path: str,
-    config: GeonamesConfig,
-    observation=None,
+    **options,
 ) -> DataFrame:
-    """:func:`output_lines` over the three TSVs at these paths."""
+    """Path-level entry mirroring the reference's transform step
+    signature (geonames.js:223): :func:`output_lines` over the three
+    TSVs at these paths; ``options`` are its keyword options."""
+    from etl_geonames_spark.sources.tsv import read_admin_codes, read_all_countries
+
     return output_lines(
-        *_read_paths(spark, all_countries_path, admin1_path, admin2_path),
+        read_all_countries(spark, all_countries_path),
+        read_admin_codes(spark, admin1_path),
+        read_admin_codes(spark, admin2_path),
         config,
-        observation=observation,
+        **options,
     )

@@ -4,11 +4,13 @@ One synthetic GeoNames-shaped fixture (FIXTURES.md §B) covering every
 semantic branch of the reference's hot path (SURVEY.md §3.3):
 prefix-match typing and drops, the exactly-3-codes gate, self-parent
 fallback, extra-uris override, the empty-filters quirk, [lon, lat]
-coordinate order, and join-miss handling.
+coordinate order, and join-miss handling. Every output check runs the
+job's own transform, :func:`output_lines`, and parses its NDJSON lines.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -16,11 +18,12 @@ from pyspark.sql import functions as F
 
 from etl_geonames_spark.geonames import (
     GeonamesConfig,
+    build_pits,
     envelope_lines,
     filters_predicate,
+    output_lines,
     resolve_type,
-    run_pipeline,
-    tagged_envelope,
+    transform_from_paths,
 )
 from etl_geonames_spark.sources.sinks import write_ndjson
 from etl_geonames_spark.sources.tsv import read_admin_codes, read_all_countries
@@ -74,13 +77,33 @@ def paths(tmp_path_factory):
     return p
 
 
+def _tables(spark, paths):
+    return (
+        read_all_countries(spark, paths["allCountries.txt"]),
+        read_admin_codes(spark, paths["admin1CodesASCII.txt"]),
+        read_admin_codes(spark, paths["admin2Codes.txt"]),
+    )
+
+
+def _parsed(lines):
+    """(pits, relations): the parsed JSON objects of each kind of line."""
+    out = {"pits": [], "relations": []}
+    for r in lines.collect():
+        out[r["kind"]].append(json.loads(r["value"]))
+    return out["pits"], out["relations"]
+
+
 @pytest.fixture(scope="module")
 def outputs(spark, paths):
-    fact = read_all_countries(spark, paths["allCountries.txt"])
-    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
-    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
-    pits, rels = run_pipeline(fact, a1, a2, CONFIG)
-    return pits.collect(), rels.collect()
+    return _parsed(
+        transform_from_paths(
+            spark,
+            paths["allCountries.txt"],
+            paths["admin1CodesASCII.txt"],
+            paths["admin2Codes.txt"],
+            CONFIG,
+        )
+    )
 
 
 def test_pit_set(outputs):
@@ -147,17 +170,17 @@ def test_join_miss_drop_is_counted(spark, paths):
     ride the same action as the output, no extra pass."""
     from pyspark.sql import Observation
 
-    fact = read_all_countries(spark, paths["allCountries.txt"])
-    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
-    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
     obs = Observation("relation_misses")
-    _, rels = run_pipeline(fact, a1, a2, CONFIG, observation=obs)
-    got = {r["from"].rsplit("/", 1)[-1] for r in rels.collect()}
+    _, rels = _parsed(output_lines(*_tables(spark, paths), CONFIG, observation=obs))
+    got = {r["from"].rsplit("/", 1)[-1] for r in rels}
     assert "1009" not in got
     metrics = obs.get
     assert metrics["a2_misses"] == 1  # exactly the 1009 row
     assert metrics["a1_misses"] == 0
-    assert metrics["gated_rows"] == 5  # 1001, 2002, 1005, 1008, 1009
+    assert metrics["pits"] == 8
+    assert metrics["relations"] == len(rels) == 4
+    # every gated row resolves or misses: 1001, 2002, 1005, 1008, 1009
+    assert metrics["relations"] + metrics["a2_misses"] == 5
 
 
 def test_join_miss_fail_mode_raises(spark, paths):
@@ -167,26 +190,32 @@ def test_join_miss_fail_mode_raises(spark, paths):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
-    fact = read_all_countries(spark, paths["allCountries.txt"])
-    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
-    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
-    _, rels = run_pipeline(fact, a1, a2, CONFIG, on_miss="fail")
+    lines = output_lines(*_tables(spark, paths), CONFIG, on_miss="fail")
     with pytest.raises((Py4JJavaError, PySparkException)) as exc:
-        rels.collect()
+        lines.collect()
     assert "admin2 probe miss for key NL.07.9999" in str(exc.value)
+    with pytest.raises(ValueError, match="on_miss"):
+        output_lines(*_tables(spark, paths), CONFIG, on_miss="ignore")
 
 
 def test_join_miss_fail_mode_clean_data_passes(spark, paths):
     """fail mode is not fail-always: with the miss row filtered out
-    upstream, strict mode produces the same edges as drop mode."""
-    fact = read_all_countries(spark, paths["allCountries.txt"]).filter(
-        F.col("geonameid") != "1009"
-    )
-    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
-    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
-    _, rels = run_pipeline(fact, a1, a2, CONFIG, on_miss="fail")
-    got = sorted(r["from"].rsplit("/", 1)[-1] for r in rels.collect())
+    upstream, strict mode writes the same lines as drop mode; and pit
+    rows, which have no admin keys, never trip it."""
+    fact, a1, a2 = _tables(spark, paths)
+    clean = fact.filter(F.col("geonameid") != "1009")
+    strict = sorted(output_lines(clean, a1, a2, CONFIG, on_miss="fail").collect())
+    assert strict == sorted(output_lines(clean, a1, a2, CONFIG).collect())
+    _, rels = _parsed(output_lines(clean, a1, a2, CONFIG, on_miss="fail"))
+    got = sorted(r["from"].rsplit("/", 1)[-1] for r in rels)
     assert got == ["1001", "1005", "1008", "2002"]
+    # 1003, 1004, 1010 have 2, 4 and 1 codes: pits only, and with no
+    # dim rows at all every probe would miss
+    ungated = fact.filter(F.col("geonameid").isin("1003", "1004", "1010"))
+    pits, rels = _parsed(
+        output_lines(ungated, a1.limit(0), a2.limit(0), CONFIG, on_miss="fail")
+    )
+    assert len(pits) == 3 and rels == []
 
 
 def test_empty_filters_quirk(spark, paths):
@@ -195,12 +224,7 @@ def test_empty_filters_quirk(spark, paths):
     cfg = GeonamesConfig(
         types=CONFIG.types, filters=[], extra_uris=CONFIG.extra_uris
     )
-    fact = read_all_countries(spark, paths["allCountries.txt"])
-    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
-    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
-    pits, rels = run_pipeline(fact, a1, a2, cfg)
-    assert pits.count() == 0
-    assert rels.count() == 0
+    assert _parsed(output_lines(*_tables(spark, paths), cfg)) == ([], [])
 
 
 def test_extra_ids_strips_first_base_uri_only():
@@ -271,26 +295,26 @@ def test_resolve_type_unit(spark):
     }
 
 
-def test_tagged_envelope_roundtrip(spark, paths):
-    import json
-
-    fact = read_all_countries(spark, paths["allCountries.txt"])
-    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
-    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
-    pits, rels = run_pipeline(fact, a1, a2, CONFIG)
-    lines = [json.loads(r["json"]) for r in tagged_envelope(pits, rels).collect()]
-    kinds = {line["type"] for line in lines}
+def test_envelope_roundtrip(spark, paths):
+    lines = output_lines(*_tables(spark, paths), CONFIG)
+    kind = F.col("kind")
+    envelope = envelope_lines(
+        lines.filter(kind == "pits").select("value"),
+        lines.filter(kind == "relations").select("value"),
+    )
+    parsed = [json.loads(r["json"]) for r in envelope.collect()]
+    kinds = {line["type"] for line in parsed}
     assert kinds == {"pit", "relation"}
-    pit = next(l["obj"] for l in lines if l["type"] == "pit")
+    pit = next(l["obj"] for l in parsed if l["type"] == "pit")
     assert set(pit) >= {"uri", "name", "type", "geometry", "data"}
-    rel = next(l["obj"] for l in lines if l["type"] == "relation")
+    rel = next(l["obj"] for l in parsed if l["type"] == "relation")
     assert set(rel) == {"from", "to", "type"}
 
 
-def test_envelope_framing_has_one_definition(spark, paths, tmp_path):
-    """``tagged_envelope`` over the pipeline and ``envelope_lines`` over
-    the JSON sink's written lines give the same bytes: ``to_json`` is the
-    sink's serialization, dropped null fields included."""
+def test_pit_lines_are_the_json_sinks_lines(spark, paths, tmp_path):
+    """``output_lines``' pit lines are, byte for byte, what the JSON sink
+    writes for :func:`build_pits` over the filtered rows: ``to_json`` is
+    the sink's serialization, dropped null fields included."""
     # the fixture plus a row with no name (a null field the JSON writers
     # drop) and an unparseable latitude (a null array element they keep)
     nameless = ["1011", "", "", "", "garbage", "5.5", "P", "PPL", "NL", "",
@@ -301,28 +325,24 @@ def test_envelope_framing_has_one_definition(spark, paths, tmp_path):
         encoding="utf-8",
     )
     fact = read_all_countries(spark, str(dump))
-    a1 = read_admin_codes(spark, paths["admin1CodesASCII.txt"])
-    a2 = read_admin_codes(spark, paths["admin2Codes.txt"])
-    pits, rels = run_pipeline(fact, a1, a2, CONFIG)
-    write_ndjson(pits, str(tmp_path / "pits"))
-    write_ndjson(rels, str(tmp_path / "relations"))
-    read_back = envelope_lines(
-        spark.read.text(str(tmp_path / "pits")),
-        spark.read.text(str(tmp_path / "relations")),
-    )
-    want = sorted(r["json"] for r in tagged_envelope(pits, rels).collect())
-    assert want == sorted(r["json"] for r in read_back.collect())
-    nameless_line = next(line for line in want if "/1011" in line)
+    _, a1, a2 = _tables(spark, paths)
+    lines = output_lines(fact, a1, a2, CONFIG)
+    got = sorted(r["value"] for r in lines.filter(F.col("kind") == "pits").collect())
+    filtered = fact.filter(filters_predicate(CONFIG.filters, CONFIG.extra_ids()))
+    write_ndjson(build_pits(filtered, CONFIG), str(tmp_path / "pits"))
+    written = spark.read.text(str(tmp_path / "pits"))
+    assert got == sorted(r["value"] for r in written.collect())
+    nameless_line = next(line for line in got if "/1011" in line)
     assert '"name"' not in nameless_line
     assert '"coordinates":[5.5,null]' in nameless_line
 
 
 def test_duplicate_admin_codes_never_duplicate_pits(spark, tmp_path):
-    """A dim code listed twice multiplies relations, as build_relations
-    does, and never pits: the job joins the dims only after each typed
-    row is split into its pit line and its relation row."""
+    """A dim code listed twice multiplies relations, once per matching
+    admin2 row and once per matching admin1 row, and never pits: the job
+    joins the dims only after each typed row is split into its pit line
+    and its relation row."""
     import glob
-    import json
     from collections import Counter
 
     from etl_geonames_spark.geonames import job
@@ -353,23 +373,32 @@ def test_duplicate_admin_codes_never_duplicate_pits(spark, tmp_path):
             for line in open(part, encoding="utf-8").read().split("\n")[:-1]
         )
 
-    pits, rels = run_pipeline(
-        read_all_countries(spark, str(landed / "allCountries.txt")),
-        read_admin_codes(spark, str(landed / "admin1CodesASCII.txt")),
-        read_admin_codes(spark, str(landed / "admin2Codes.txt")),
-        CONFIG,
+    fact = read_all_countries(spark, str(landed / "allCountries.txt"))
+    pits = build_pits(
+        fact.filter(filters_predicate(CONFIG.filters, CONFIG.extra_ids())), CONFIG
     )
+    assert written("pits") == Counter(
+        r[0] for r in pits.select(F.to_json(F.struct("*"))).collect()
+    )
+    assert set(written("pits").values()) == {1}
 
-    def to_json(df):
-        return Counter(
-            r[0] for r in df.select(F.to_json(F.struct("*"))).collect()
+    def edge(child, parent):
+        return json.dumps(
+            {"from": BASE + child, "to": BASE + parent, "type": "hg:liesIn"},
+            separators=(",", ":"),
         )
 
-    assert written("pits") == to_json(pits)
-    assert set(written("pits").values()) == {1}
-    assert written("relations") == to_json(rels)
-    # 1001 meets both admin2 rows of NL.07.0392, each once per admin1
-    # row of NL.07: two edges, each written twice
-    edge = '{{"from":"http://sws.geonames.org/1001","to":"{}","type":"hg:liesIn"}}'
-    for parent in ("2002", "2003"):
-        assert written("relations")[edge.format(BASE + parent)] == 2
+    # 1001 and 1005 meet both admin2 rows of NL.07.0392, each once per
+    # admin1 row of NL.07; 2002 is its own admin2 parent once (then each
+    # admin1 row is a parent) and a child of 2003 once per admin1 row;
+    # BE.BRU.21 and BE.BRU are listed once
+    assert written("relations") == Counter({
+        edge("1001", "2002"): 2,
+        edge("1001", "2003"): 2,
+        edge("1005", "2002"): 2,
+        edge("1005", "2003"): 2,
+        edge("2002", "3003"): 1,
+        edge("2002", "3004"): 1,
+        edge("2002", "2003"): 2,
+        edge("1008", "4004"): 1,
+    })

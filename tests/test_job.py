@@ -12,7 +12,8 @@ from pathlib import Path
 
 import pytest
 
-from etl_geonames_spark.geonames.job import run
+from etl_geonames_spark.geonames import job
+from etl_geonames_spark.geonames.job import config_to_pipeline, run
 from etl_geonames_spark.sources.sinks import write_lines_by_kind
 
 
@@ -183,3 +184,73 @@ def test_lines_by_kind_rejects_unexpected_kinds(spark, tmp_path):
     with pytest.raises(ValueError, match="kind=other"):
         write_lines_by_kind(df, str(tmp_path), ("pits",))
     assert (tmp_path / "pits" / "keep").exists()
+
+
+@pytest.mark.parametrize(
+    "cfg, extra, key",
+    [
+        ({}, "http://sws.geonames.org/1003", "extraUris"),
+        ({}, {"http://sws.geonames.org/1003": 1}, "extraUris"),
+        ({}, [12], "extraUris"),
+        ({"countries": "NL"}, None, "countries"),
+        ({"countries": ["NL", None]}, None, "countries"),
+        ({"filters": [], "countries": "NL"}, None, "countries"),
+        ({"filters": {"countryCode": "NL"}}, None, "filters"),
+        ({"filters": ["NL"]}, None, "filters"),
+    ],
+)
+def test_config_rejects_malformed_lists(tmp_path, cfg, extra, key):
+    """A string or an object where a list belongs would iterate as its
+    characters or keys and filter the wrong rows without an error; a
+    non-string URI would fail far from the config. Each is a ValueError
+    naming the key (and the file, for extraUris)."""
+    if extra is not None:
+        path = tmp_path / "extra.json"
+        path.write_text(json.dumps(extra))
+        cfg = {**cfg, "extraUris": str(path)}
+    with pytest.raises(ValueError, match=key) as exc:
+        config_to_pipeline(cfg)
+    if extra is not None:
+        assert str(tmp_path / "extra.json") in str(exc.value)
+
+
+def test_transform_step_builds_through_transform_from_paths(
+    spark, tmp_path, monkeypatch
+):
+    """The job builds its plan with one call of ``transform_from_paths``,
+    looked up on the job module, so a wrapper bound there (as a tracer
+    binds one) sees the whole build, and the outputs do not change."""
+    import importlib
+
+    for module, name in [
+        ("etl_geonames_spark.geonames.pipeline", "transform_from_paths"),
+        ("etl_geonames_spark.sources.sinks", "write_ndjson"),
+        ("etl_geonames_spark.sources.sinks", "write_ndjson_lines"),
+        ("etl_geonames_spark.ingest", "download"),
+    ]:
+        assert callable(getattr(importlib.import_module(module), name))
+
+    server = _serve(tmp_path)
+    cfg = {"countries": ["NL"], "types": {"PPL": "hg:Place"},
+           "baseUrl": f"file://{server}/"}
+    plain = tmp_path / "plain"
+    job.download_step(cfg, str(plain))
+    job.transform_step(cfg, str(plain), spark)
+
+    calls = []
+    build = job.transform_from_paths
+
+    def record(*args, **kwargs):
+        calls.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(job, "transform_from_paths", record)
+    traced = tmp_path / "traced"
+    job.download_step(cfg, str(traced))
+    job.transform_step(cfg, str(traced), spark)
+
+    assert len(calls) == 1
+    for name in ("pits", "relations"):
+        got = Counter(_lines(traced / "out" / name))
+        assert got == Counter(_lines(plain / "out" / name))
+        assert got

@@ -99,18 +99,17 @@ def test_llm_dedup_exact_single_shuffle(spark, sf_dir):
 
 
 def test_geonames_relations_shuffle_free(spark, tmp_path):
-    """build_relations: both dim probes must be broadcast joins."""
+    """output_lines: both dim probes must be broadcast joins."""
     from etl_geonames_spark.geonames import GeonamesConfig
-    from etl_geonames_spark.geonames.pipeline import run_pipeline
+    from etl_geonames_spark.geonames.pipeline import output_lines
     from etl_geonames_spark.schemas import ADMIN_CODE_SCHEMA, ALL_COUNTRIES_SCHEMA
 
     fact = spark.createDataFrame([], ALL_COUNTRIES_SCHEMA)
     dim = spark.createDataFrame([], ADMIN_CODE_SCHEMA)
     cfg = GeonamesConfig(types={"PPL": "x"}, filters=[{"countryCode": "NL"}])
-    pits, rels = run_pipeline(fact, dim, dim, cfg)
-    assert shuffle_exchange_count(pits) == 0
-    assert shuffle_exchange_count(rels) == 0
-    assert not has_node(rels, "SortMergeJoin")
+    lines = output_lines(fact, dim, dim, cfg)
+    assert shuffle_exchange_count(lines) == 0
+    assert not has_node(lines, "SortMergeJoin")
 
 
 def _broadcast_joins(df) -> list[tuple[str, str, str]]:
@@ -152,7 +151,7 @@ def test_geonames_allowlist_is_broadcast_existence_join(spark, tmp_path):
     broadcast ExistenceJoin over a LocalTableScan: no shuffle, and no
     literal In pushed into the TSV scan (a per-row linear compare)."""
     from etl_geonames_spark.geonames import GeonamesConfig
-    from etl_geonames_spark.geonames.pipeline import run_pipeline
+    from etl_geonames_spark.geonames.pipeline import output_lines
     from etl_geonames_spark.schemas import ADMIN_CODE_SCHEMA
     from etl_geonames_spark.sources.tsv import read_all_countries
 
@@ -167,12 +166,11 @@ def test_geonames_allowlist_is_broadcast_existence_join(spark, tmp_path):
         filters=[{"countryCode": "NL"}],
         extra_uris=[f"http://sws.geonames.org/{i}" for i in range(2000, 2025)],
     )
-    pits, rels = run_pipeline(fact, dim, dim, cfg)
-    for df in (pits, rels):
-        assert shuffle_exchange_count(df) == 0
-        assert _existence_joins(df) == [("BuildRight", "LocalTableScanExec")]
-        assert "FileScan csv" in explain_str(df, mode="simple")
-        assert "In(geonameid" not in pushed_filters(df)
+    lines = output_lines(fact, dim, dim, cfg)
+    assert shuffle_exchange_count(lines) == 0
+    assert _existence_joins(lines) == [("BuildRight", "LocalTableScanExec")]
+    assert "FileScan csv" in explain_str(lines, mode="simple")
+    assert "In(geonameid" not in pushed_filters(lines)
 
 
 def test_geonames_envelope_reads_back_the_written_outputs(
