@@ -5745,21 +5745,10 @@ def llm_metric_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the textbook exact form; the corpus-scale path is a
     merge-sort inversion count (O(n log n)), worth building only if
     τ is ever needed corpus-wide — Spearman (distributed_rank-based,
-    corpus-wide) is the production-scale rank correlation here.
-    The slice bound is a parameter of ``metric_kendall`` so
-    benchmarks/slice_width_probe.py can measure the w(w-1)/2 pair
-    bill as a curve."""
-    return metric_kendall(spark, sf_dir, 200)
-
-
-def metric_kendall(
-    spark: SparkSession, sf_dir: str, slice_hi: int
-) -> DataFrame:
-    """Parameterized body of llm_metric_kendall (doc_id <
-    ``slice_hi``); see the registered query's docstring."""
+    corpus-wide) is the production-scale rank correlation here."""
     m = (
         load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < slice_hi)
+        .filter(F.col("doc_id") < 200)
         .select(
             "doc_id",
             F.col("n_chars").cast("long").alias("x"),

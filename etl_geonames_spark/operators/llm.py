@@ -1376,9 +1376,7 @@ def kmeans_assign(pts: DataFrame, c: DataFrame) -> DataFrame:
     (llm_semdedup 1.9 → 2.3+ s at sf0.1: doubly-nested interpreted
     lambdas beat the exchange savings only never — the fanout rows
     are collapsed MAP-SIDE by the partial min_by, so the exchange
-    carries one compact row per point). The large-k production path
-    is the Arrow assignment (_arrow_cells: broadcast centroids,
-    numpy matmul, map-only), which the SemDeDup probe exercises."""
+    carries one compact row per point)."""
     d2 = F.aggregate(
         F.zip_with(
             F.col("emb"), F.col("cent"), lambda x, y: (x - y) * (x - y)
@@ -1975,19 +1973,12 @@ _SEMDEDUP_TAU = 0.40
 _SEMDEDUP_K = 32
 
 
-def semdedup_keep(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int,
-    tau: float,
-    arrow_assign: bool = False,
-) -> DataFrame:
-    """Parameterized SemDeDup core (blocking cells at the caller's k,
-    within-cell cosine ≥ tau drop rule). The registry query pins
-    (k=32, τ=0.40) for the fixture; benchmarks/semdedup_probe.py
-    calls this directly with k≈√n to demonstrate the paper's scaling
-    lever — pair fan-out is Σ|cell|², so k MUST grow with corpus
-    size or within-cell pairs re-approach O(n²)."""
+def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup core shared by llm_semdedup and llm_d4_diversify:
+    blocking cells at k = _SEMDEDUP_K, within-cell cosine ≥
+    _SEMDEDUP_TAU drop rule. Pair fan-out is Σ|cell|², so at corpus
+    scale k must grow with corpus size (k≈√n) or within-cell pairs
+    re-approach O(n²)."""
     # divisor clamped to 1e-12 (identically in the oracles) so an
     # all-zero vector normalizes to the zero vector instead of an
     # ANSI DIVIDE_BY_ZERO — the llm_quantize_embeddings pattern; a
@@ -1995,13 +1986,8 @@ def semdedup_keep(
     nrm = F.greatest(
         F.sqrt(_dot(F.col("emb"), F.col("emb"))), F.lit(1e-12)
     )
-    base = (
-        _arrow_cells(spark, sf_dir, k)
-        if arrow_assign
-        else _kmeans_cells(spark, sf_dir, k, 1)
-    )
     cells = (
-        base
+        _kmeans_cells(spark, sf_dir, _SEMDEDUP_K, 1)
         .join(
             load_table(spark, sf_dir, "embeddings").select(
                 "vec_id", _as_double("embedding").alias("emb")
@@ -2035,7 +2021,8 @@ def semdedup_keep(
         a.join(b, "cl")
         .where(F.col("i") < F.col("j"))
         .where(
-            qround(_dot(F.col("ua"), F.col("ub")), 6) >= F.lit(tau)
+            qround(_dot(F.col("ua"), F.col("ub")), 6)
+            >= F.lit(_SEMDEDUP_TAU)
         )
         .select(F.col("j").alias("vec_id"))
         .distinct()
@@ -2110,9 +2097,7 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one shuffle on cluster for the pair join;
     everything upstream is the already-scaled kmeans plan (broadcast
     centroids, map-side assignment)."""
-    return semdedup_keep(spark, sf_dir, _SEMDEDUP_K, _SEMDEDUP_TAU).select(
-        "vec_id", "cluster"
-    )
+    return semdedup_keep(spark, sf_dir).select("vec_id", "cluster")
 
 
 _D4_DROP_NUM = 1  # drop the floor(n_cell/4) most prototypical
@@ -2180,9 +2165,7 @@ def llm_d4_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring join; ranking windows are PARTITIONED BY cell (bounded by
     cell size, k≈√n keeps cells ~√n — never a global window). Total:
     the SemDeDup plan + one keyed aggregate + one broadcast join."""
-    keep = semdedup_keep(
-        spark, sf_dir, _SEMDEDUP_K, _SEMDEDUP_TAU
-    ).transform(pin)
+    keep = semdedup_keep(spark, sf_dir).transform(pin)
     # prototype pass: posexplode + per-(cluster, pos) means, the
     # _centroid_update shape. r15 A/B (VERDICT r14 item 5) built the
     # no-Generate 64-aggregate fold, verified it against the oracle,
@@ -2217,64 +2200,6 @@ def llm_d4_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rk.where(
         F.lit(_D4_DROP_DEN) * F.col("r") > F.lit(_D4_DROP_NUM) * F.col("nc")
     ).select("vec_id", "cluster", "proto")
-
-def _arrow_cells(
-    spark: SparkSession, sf_dir: str, k: int
-) -> DataFrame:
-    """Arrow-batched k-means cell assignment — the documented scale
-    path for large k (BASELINE.md SemDeDup probe: expression-form
-    assignment costs n·k interpreted 64-dim lambdas and overtakes the
-    pair savings past k ≈ 10²; one numpy matmul per Arrow batch does
-    the same distances dense).
-
-    Same algorithm as :func:`_kmeans_cells` with rounds=1:
-    deterministic init (first k vec_ids), one centroid update
-    (JVM-side keyed aggregate — that part is cheap and stays
-    Catalyst), centroids qround'd to the 1e-6 grid, final assignment.
-    Ties break on cluster id (centroid rows sorted by cluster, numpy
-    argmin takes the first minimum — min_by struct order). FP caveat:
-    matmul accumulation order differs from the sequential lambda, so
-    a point EXACTLY equidistant to two centroids beyond the 1e-6
-    centroid grid could flip cells vs the expression path — harmless
-    for blocking, and tests pin full agreement on the fixture."""
-    import numpy as np
-
-    pts = (
-        spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
-        .select("vec_id", _as_double("embedding").alias("emb"))
-    )
-
-    def assign_with(cent_rows):
-        cent_rows = sorted(cent_rows, key=lambda r: r[0])
-        ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-        C = np.array([r[1] for r in cent_rows], dtype=np.float64)
-        c2 = (C * C).sum(axis=1)
-
-        def fn(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                X = np.array(pdf["emb"].tolist(), dtype=np.float64)
-                # argmin over ||x-c||²; x² term constant per row — drop
-                d2 = c2[None, :] - 2.0 * (X @ C.T)
-                best = ids[np.argmin(d2, axis=1)]
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"], "cluster": best}
-                )
-
-        return pts.mapInPandas(fn, schema="vec_id long, cluster int")
-
-    init = [
-        (int(r["vec_id"]), list(r["emb"]))
-        for r in pts.filter(F.col("vec_id") < k).collect()
-    ]
-    a0 = assign_with(init)
-    c1 = _centroid_update(a0.join(pts, "vec_id"))
-    cents = [
-        (int(r["cluster"]), list(r["cent"])) for r in c1.collect()
-    ]
-    return assign_with(cents)
 
 
 def _power_round_sql(vprev: str, out: str) -> str:
@@ -5701,10 +5626,6 @@ def llm_substring_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     are graded against (tests/test_stat_invariants.py pins
     census ≥ both, per pair).
 
-    Delegates to ``substring_census(spark, sf_dir, 200)`` — the
-    slice bound is a parameter so benchmarks/slice_width_probe.py
-    can measure the pair bill as a curve over the slice width.
-
     Per doc, every gram of every length l ∈ [3, n] is identified in
     O(1) from prefix Horner arrays: g(s, l) = H[s+l] − H[s]·Bˡ, the
     Rabin-Karp rolling identity, under TWO independent (base, prime)
@@ -5721,7 +5642,80 @@ def llm_substring_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB you run it on the eval slice or behind a blocked candidate
     generator as the exactness auditor; llm_lcs_corpus_exact below is
     the corpus-wide exact path (threshold-seeded, no slice bound)."""
-    return substring_census(spark, sf_dir, 200)
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < 200
+    )
+    tk = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
+    h = (
+        docs.select("doc_id", tk.alias("tk"))
+        .filter(F.size("tk") >= 3)
+        .select(
+            "doc_id",
+            F.size("tk").alias("n"),
+            _rk_whash("tk", 31, _SC_P1).alias("wh1"),
+            _rk_whash("tk", 37, _SC_P2).alias("wh2"),
+        )
+        .select(
+            "doc_id",
+            "n",
+            _rk_prefix(F.col("wh1"), _SC_B1, _SC_P1).alias("h1"),
+            _rk_powers(F.col("wh1"), _SC_B1, _SC_P1).alias("pw1"),
+            _rk_prefix(F.col("wh2"), _SC_B2, _SC_P2).alias("h2"),
+            _rk_powers(F.col("wh2"), _SC_B2, _SC_P2).alias("pw2"),
+        )
+    )
+
+    def gram(s, l, hcol, pwcol, p):
+        return F.pmod(
+            F.element_at(hcol, s + l)
+            - F.element_at(hcol, s) * F.element_at(pwcol, l + 1),
+            F.lit(p),
+        )
+
+    grams = F.flatten(
+        F.transform(
+            F.sequence(F.lit(3), F.col("n")),
+            lambda l: F.transform(
+                F.sequence(F.lit(1), F.col("n") - l + 1),
+                lambda s: F.struct(
+                    l.cast("long").alias("l"),
+                    gram(s, l, F.col("h1"), F.col("pw1"), _SC_P1).alias(
+                        "g1"
+                    ),
+                    gram(s, l, F.col("h2"), F.col("pw2"), _SC_P2).alias(
+                        "g2"
+                    ),
+                ),
+            ),
+        )
+    )
+    g = (
+        spread(h, "doc_id")
+        .select("doc_id", F.explode(grams).alias("p"))
+        .select("doc_id", "p.l", "p.g1", "p.g2")
+        .distinct()
+        # UNPINNED by measurement (r15 pin A/B: none 1.11 / lazy 1.26
+        # / eager 1.40 s): both pair-join roles re-run the explode +
+        # distinct, but the census is slice-bounded (doc_id < 200) by
+        # contract, so the double pass is cheaper than checkpointing
+        # the gram table — same bytes-vs-recompute call as
+        # llm_longest_shared_gram.
+    )
+    a = g.select(
+        F.col("doc_id").alias("doc_a"), "l", "g1", "g2"
+    )
+    b = g.select(
+        F.col("doc_id").alias("doc_b"), "l", "g1", "g2"
+    )
+    j = a.join(b, ["l", "g1", "g2"]).filter(
+        F.col("doc_a") < F.col("doc_b")
+    )
+    return j.groupBy("doc_a", "doc_b").agg(
+        F.max("l").cast("long").alias("lcs_tokens"),
+        F.sum(F.when(F.col("l") == 3, 1).otherwise(0))
+        .cast("long")
+        .alias("n_shared_3grams"),
+    )
 
 
 def _rk_whash(tok_col: str, base: int, p: int):
@@ -5763,99 +5757,6 @@ def _rk_powers(whcol, base: int, p: int):
         lambda acc, x: F.concat(
             acc, F.array(F.element_at(acc, -1) * base % p)
         ),
-    )
-
-
-def substring_census(
-    spark: SparkSession, sf_dir: str, slice_hi: int
-) -> DataFrame:
-    """Parameterized body of llm_substring_census (doc_id <
-    ``slice_hi``); see the registered query's docstring for the
-    contract and benchmarks/slice_width_probe.py for the width
-    curve."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < slice_hi
-    )
-    tk = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
-
-    def whash(base, p):
-        return _rk_whash("tk", base, p)
-
-    def prefix(whcol, base, p):
-        return _rk_prefix(whcol, base, p)
-
-    def powers(whcol, base, p):
-        return _rk_powers(whcol, base, p)
-
-    h = (
-        docs.select("doc_id", tk.alias("tk"))
-        .filter(F.size("tk") >= 3)
-        .select(
-            "doc_id",
-            F.size("tk").alias("n"),
-            whash(31, _SC_P1).alias("wh1"),
-            whash(37, _SC_P2).alias("wh2"),
-        )
-        .select(
-            "doc_id",
-            "n",
-            prefix(F.col("wh1"), _SC_B1, _SC_P1).alias("h1"),
-            powers(F.col("wh1"), _SC_B1, _SC_P1).alias("pw1"),
-            prefix(F.col("wh2"), _SC_B2, _SC_P2).alias("h2"),
-            powers(F.col("wh2"), _SC_B2, _SC_P2).alias("pw2"),
-        )
-    )
-
-    def gram(s, l, hcol, pwcol, p):
-        return F.pmod(
-            F.element_at(hcol, s + l)
-            - F.element_at(hcol, s) * F.element_at(pwcol, l + 1),
-            F.lit(p),
-        )
-
-    grams = F.flatten(
-        F.transform(
-            F.sequence(F.lit(3), F.col("n")),
-            lambda l: F.transform(
-                F.sequence(F.lit(1), F.col("n") - l + 1),
-                lambda s: F.struct(
-                    l.cast("long").alias("l"),
-                    gram(s, l, F.col("h1"), F.col("pw1"), _SC_P1).alias(
-                        "g1"
-                    ),
-                    gram(s, l, F.col("h2"), F.col("pw2"), _SC_P2).alias(
-                        "g2"
-                    ),
-                ),
-            ),
-        )
-    )
-    g = (
-        spread(h, "doc_id")
-        .select("doc_id", F.explode(grams).alias("p"))
-        .select("doc_id", "p.l", "p.g1", "p.g2")
-        .distinct()
-        # UNPINNED by measurement (r15 pin A/B: none 1.11 / lazy 1.26
-        # / eager 1.40 s): both pair-join roles re-run the explode +
-        # distinct, but the census is slice-bounded (doc_id < 200) by
-        # contract, so the double pass is cheaper than checkpointing
-        # the gram table at every slice width the contract allows —
-        # same bytes-vs-recompute call as llm_longest_shared_gram.
-    )
-    a = g.select(
-        F.col("doc_id").alias("doc_a"), "l", "g1", "g2"
-    )
-    b = g.select(
-        F.col("doc_id").alias("doc_b"), "l", "g1", "g2"
-    )
-    j = a.join(b, ["l", "g1", "g2"]).filter(
-        F.col("doc_a") < F.col("doc_b")
-    )
-    return j.groupBy("doc_a", "doc_b").agg(
-        F.max("l").cast("long").alias("lcs_tokens"),
-        F.sum(F.when(F.col("l") == 3, 1).otherwise(0))
-        .cast("long")
-        .alias("n_shared_3grams"),
     )
 
 

@@ -21,7 +21,10 @@ between engines cannot flip the hash.
 from __future__ import annotations
 
 import importlib
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -48,197 +51,65 @@ _OPERATOR_MODULES = [
     "etl_geonames_spark.operators.stats",
 ]
 
-# The differential driver records correctness rows for the FIRST 50
-# queries in ``queries()`` dict order each round. THE RECIPE (rotated
-# every round): plan-changed-this-round names first (plan-changed
-# outranks merely-old), then the oldest last-checked cohorts until
-# the window holds exactly 50; everything after ordered by
-# last-driver-checked round ascending, freshly-checked names at the
-# back. History: r14 drained the r2 cohort; see git for prior
-# windows.
-# ROUND-15 WINDOW (the recipe, executed again): 19 r15 PLAN/JOB-
-# CHANGED names lead — the centroid-update fold rewrite family
-# (llm_kmeans / llm_semdedup / llm_kmeans_quality / llm_d4_diversify),
-# the newly pinned census (llm_substring_census), the single-binding
-# llm_longest_self_repeat, and the lazy-pin A/B family whose job
-# structure round 15 changed most (the dedup/simhash/gram/minhash
-# chain, graph_betweenness_pivots, join_bloom_prefilter) — then the
-# FINAL 7 r3-era names (cohort drained) and 24 r4-era names: exactly
-# 50. Everything after is ordered by last-driver-checked round
-# ASCENDING (stable within a round), which puts CORRECTNESS_r14's
-# names at the back. Every rotated-out name stays guarded by
-# tests/test_oracle_parity.py, which checks ALL queries every run.
-# NEXT-ROUND PLAN: same recipe — r15 names to the back, new
-# plan-changed names to the head; the oldest cohort is then r4 (24
-# names left), then r5.
-_DRIVER_PRIORITY = [
-    'llm_d4_diversify', 'llm_kmeans', 'llm_semdedup',
-    'llm_kmeans_quality', 'llm_substring_census',
-    'llm_longest_self_repeat', 'llm_lcs_corpus_exact',
-    'llm_minhash_band_tuning', 'llm_minhash_jaccard_est',
-    'llm_simhash_verifiable', 'llm_longest_shared_gram',
-    'llm_exact_shared_run', 'llm_dedup_verified', 'llm_dedup_simhash',
-    'llm_dedup_embedding', 'llm_dedup_cluster', 'llm_dedup_canonical',
-    'graph_betweenness_pivots', 'join_bloom_prefilter',
-    'sql_window_clause', 'llm_mask_tokens', 'llm_vocab_coverage',
-    'llm_dedup_incremental', 'ts_weekly_active', 'ts_funnel_windowed',
-    'udf_scalar_iter', 'llm_inverted_index', 'udf_map_in_arrow',
-    'llm_quantize_embeddings', 'fn_array_setops',
-    'llm_embedding_centroids', 'mm_image_phash_dedup',
-    'llm_ann_lsh_verifiable', 'scd2_asof_lookup', 'agg_string_concat',
-    'graph_reciprocity', 'fn_surrogate_key', 'ts_sli_availability',
-    'llm_apply_mix_weights', 'fn_printf', 'sql_filter_clause',
-    'fn_base64_roundtrip', 'agg_higher_moments', 'llm_bigram_logprob',
-    'geo_extent_by_group', 'agg_histogram', 'agg_mode', 'agg_conditional',
-    'sql_tpch_q1', 'sql_tpch_q2', 'sql_tpch_q7', 'sql_tpch_q8',
-    'sql_tpch_q9', 'sql_tpch_q10', 'sql_tpch_q11', 'sql_tpch_q15',
-    'sql_tpch_q20', 'sql_tpch_q21', 'fn_bit_ops', 'fn_levenshtein',
-    'ts_resample_ohlc', 'ts_anomaly_zscore', 'join_interval_overlap',
-    'llm_decontaminate', 'llm_cap_per_source', 'llm_dedup_keep_best',
-    'llm_shuffle_order', 'geo_bbox_filter', 'geo_haversine',
-    'geo_morton_cell', 'geo_grid_join', 'llm_embedding_dim_stats',
-    'stat_anova_oneway', 'stat_two_proportion_z', 'stat_mann_kendall',
-    'stat_ljung_box', 'ts_holt_winters', 'ts_rsi',
-    'ts_interpolate_linear', 'mm_audio_resample', 'mm_image_histogram',
-    'llm_dedup_band_stats', 'ts_rolling_corr', 'ts_seasonal_decompose',
-    'stat_cronbach_alpha', 'dq_schema_drift', 'graph_copurchase',
-    'mm_video_keyframes', 'fn_date_edge', 'ts_peaks', 'mm_image_gradient',
-    'geo_voronoi_assign', 'llm_kneser_ney_bigram', 'llm_quality_funnel',
-    'geo_trajectory_stats', 'stat_sample_size', 'mm_modality_route',
-    'dq_observed_metrics', 'maintenance_compaction_plan',
-    'llm_dedup_embedding_verifiable', 'stat_wilson_ci',
-    'ts_crosscorr_lags', 'geo_knn', 'mm_decode_image', 'mm_resize_image',
-    'mm_decode_audio', 'mm_video_frames', 'mm_audio_features',
-    'mm_video_scene_cuts', 'mm_audio_vad', 'mm_image_entropy',
-    'cdc_merge_upsert', 'scd2_history', 'split_train_test',
-    'mm_feature_extract', 'llm_bpe_train_rounds', 'llm_html_extract',
-    'llm_ann_ivf_verifiable', 'llm_cross_source_dup_matrix',
-    'llm_ann_recall_eval', 'agg_heavy_hitters', 'stat_friedman',
-    'stat_permutation_test', 'ts_period_detect', 'geo_polygon_centroid',
-    'mm_image_ssim', 'mm_audio_pitch', 'graph_hits', 'llm_pq_quantize',
-    'sample_per_key', 'profile_columns', 'llm_normalize_text',
-    'llm_pii_redact', 'llm_repetition_ratio', 'llm_mix_weights',
-    'fn_url_parse', 'ts_sessionize', 'llm_chunk_documents',
-    'llm_ngram_counts', 'llm_bucket_by_length', 'graph_triangle_count',
-    'fn_unpivot', 'fn_posexplode', 'fn_try_arith', 'llm_gopher_quality',
-    'llm_perplexity_buckets', 'llm_dedup_containment',
-    'ts_interval_union', 'llm_bpe_pair_counts', 'geo_geohash',
-    'agg_bitmap_distinct', 'agg_corr_covar', 'geo_point_in_polygon',
-    'agg_skew_two_phase', 'join_fuzzy_name', 'set_intersect_all',
-    'sql_relational_division', 'ts_autocorr', 'graph_jaccard_neighbors',
-    'llm_tokenizer_fertility', 'llm_ngram_span_dedup',
-    'llm_source_overlap', 'join_interval_grid', 'ts_allen_relations',
-    'llm_bleu_bigram', 'llm_pq_search_adc', 'geo_kde_grid',
-    'maintenance_cluster_metric', 'dq_referential_integrity',
-    'dq_psi_drift', 'llm_ttr_curve', 'llm_dp_histogram',
-    'llm_span_corruption', 'join_size_cms_estimate',
-    'stat_tost_equivalence', 'stat_grubbs', 'ts_entropy_rate',
-    'llm_ann_ivf', 'agg_sketch_hll', 'agg_sketch_kll',
-    'llm_compression_ratio', 'agg_ab_ttest', 'agg_chi_square',
-    'ts_cusum_drift', 'sql_session_variables', 'sql_parameterized',
-    'ts_event_regex', 'udtf_analyze', 'agg_sketch_cms',
-    'agg_percentile_disc', 'ts_calendar_dim', 'geo_tile_pyramid',
-    'llm_feature_hashing', 'llm_minhash_verifiable', 'sql_group_by_all',
-    'sql_distinct_on', 'ts_backtest_snaive', 'llm_langid_confusion',
-    'llm_ndcg_eval', 'llm_pmi_collocations', 'ts_fano_burstiness',
-    'geo_shoelace_area', 'llm_lm_crossentropy', 'ts_gaps_islands',
-    'set_except_all', 'llm_winnowing', 'llm_dpo_pairs', 'sample_bottom_k',
-    'geo_bearing_profile', 'llm_url_dedup', 'join_band_time',
-    'fn_ip_cidr', 'llm_bootstrap_ci', 'mm_frame_sample',
-    'llm_mix_kl_divergence', 'llm_sft_render', 'llm_bpe_apply',
-    'geo_dbscan_core', 'geo_point_in_concave_polygon', 'graph_kcore_peel',
-    'graph_clustering_coefficient', 'graph_assortativity',
-    'llm_ngram_novelty', 'llm_boilerplate_ngrams', 'llm_mrr_eval',
-    'dq_freshness', 'sample_weighted_es', 'agg_sketch_kmv',
-    'llm_rrf_fusion', 'sql_asof_join', 'stat_chi2_independence',
-    'stat_markov_transitions', 'stat_welch_ttest', 'stat_levene',
-    'stat_bootstrap_diff', 'stat_dunn_posthoc', 'dq_embedding_norm_qa',
-    'stat_kendall_w', 'stat_mutual_information', 'stat_benford',
-    'stat_cohens_kappa', 'llm_calibration_bins', 'agg_theil_index',
-    'ts_theil_sen_daily', 'win_rolling_median', 'ts_m4_downsample',
-    'ts_sax_symbols', 'ts_decayed_score', 'udtf_table_arg',
-    'mm_decode_meta', 'ts_permutation_entropy', 'ts_spc_xbar_r',
-    'llm_edit_distance_ratio', 'llm_rouge_l', 'mm_audio_clipping_detect',
-    'mm_image_blockiness', 'geo_hexbin', 'geo_polyline_simplify',
-    'dq_cross_field_consistency', 'llm_cdc_chunk_dedup',
-    'llm_overlap_stitch', 'llm_watermark_detect',
-    'llm_prefix_cache_stats', 'graph_harmonic_centrality', 'stat_mcnemar',
-    'stat_cochran_q', 'stat_jarque_bera', 'stat_cohens_d',
-    'stat_cochran_armitage', 'ts_seasonal_strength',
-    'llm_quality_features', 'stat_fleiss_kappa', 'dq_esd_outliers',
-    'sample_neyman_allocation', 'llm_dsir_weights', 'ts_kpss',
-    'stat_bartlett', 'stat_ad_ksample', 'stat_moods_median',
-    'ts_dickey_fuller', 'ts_variance_ratio', 'ts_arch_lm',
-    'ts_granger_lag1', 'ts_durbin_watson', 'ts_turning_points',
-    'stat_cvm_two_sample', 'stat_cmh', 'llm_chrf', 'stat_lilliefors',
-    'stat_fligner_killeen', 'stat_shapiro_francia', 'stat_hellinger',
-    'stat_mann_kendall_seasonal', 'udf_scalar', 'udf_grouped_map',
-    'udf_agg', 'udtf_python', 'udtf_explode', 'fn_higher_order',
-    'llm_bm25_topk', 'llm_token_entropy', 'ts_rollup_hierarchy',
-    'ts_ewma', 'llm_dedup_paragraphs', 'ts_winsorize',
-    'join_asof_nearest', 'profile_skew', 'sql_recursive_cte',
-    'sql_lateral_topk', 'join_null_safe', 'llm_unigram_logprob',
-    'fn_collation', 'llm_curate_pipeline', 'fn_explode_outer',
-    'fn_xml_roundtrip', 'llm_dedup_report', 'llm_bigram_f1',
-    'geo_polyline_length', 'llm_dataset_card', 'sql_pivot',
-    'fn_aes_roundtrip', 'graph_degree_distribution',
-    'win_distinct_rolling', 'agg_regression', 'ts_seasonal_profile',
-    'graph_rich_club', 'stat_jonckheere', 'llm_quality_classifier',
-    'llm_classifier_eval', 'llm_query_likelihood', 'stat_brunner_munzel',
-    'stat_ansari_bradley', 'ts_cointegration', 'ts_phillips_perron',
-    'stat_quade', 'llm_fim_transform', 'ts_pettitt_changepoint',
-    'llm_source_winrate', 'llm_char_entropy_gate', 'llm_lsh_pr_eval',
-    'ts_record_counts', 'llm_df_prune', 'ts_spc_ewma_chart', 'win_ntile',
-    'agg_collect_salted', 'stat_kruskal_wallis', 'agg_kmv_setops',
-    'stat_xi_correlation', 'ts_lateness_histogram', 'ts_hurst_rs',
-    'stat_page_trend', 'agg_mann_whitney', 'llm_zipf_slope', 'agg_gini',
-    'llm_topp_vocab', 'agg_weighted_median', 'sql_qualify',
-    'llm_shard_manifest', 'ts_lttb_downsample', 'llm_metric_spearman',
-    'stat_mann_whitney', 'stat_ks_two_sample', 'stat_bh_fdr',
-    'stat_runs_test', 'stat_best_split', 'stat_conformal_interval',
-    'dq_outlier_mad', 'stat_wilcoxon_signed', 'ts_acf', 'ts_pacf',
-    'ts_cusum_changepoint', 'llm_pack_bins', 'llm_metric_kendall',
-    'llm_decontaminate_semantic', 'llm_unigram_em_round',
-    'llm_renyi_efficiency', 'llm_unigram_viterbi_apply',
-    'ts_sample_entropy', 'ts_matrix_profile', 'ts_ses_grid_search',
-    'ts_ediv_changepoint', 'ts_ediv_significance', 'ts_theta_forecast',
-    'llm_embedding_power_iter', 'llm_abtt_transform', 'scan_tsv',
-    'scan_dim', 'filter_whereeq', 'filter_any_of', 'filter_extra_uris',
-    'filter_typed', 'join_admin2', 'join_self_parent_fallback',
-    'join_inner', 'join_left', 'join_semi', 'join_anti', 'join_range',
-    'join_theta', 'join_cross', 'join_asof', 'join_skew_salted',
-    'agg_group', 'agg_global', 'agg_distinct', 'agg_count_distinct',
-    'agg_approx_distinct', 'agg_rollup', 'agg_cube', 'agg_median',
-    'dedup_latest_per_key', 'agg_approx_percentile', 'agg_stats',
-    'agg_collect', 'agg_pivot', 'win_rank', 'win_distribution',
-    'win_lag_lead', 'win_running_sum', 'win_range_frame',
-    'win_first_last', 'sort_orderby', 'llm_texttiling_boundaries',
-    'stat_hodges_lehmann', 'llm_unigram_prune',
-    'llm_decontamination_overlap', 'graph_ktruss_peel', 'ts_dtw_pairs',
-    'graph_deterministic_walks', 'graph_local_bridges', 'sort_limit',
-    'set_union', 'set_intersect', 'set_except', 'sql_tpch_q3',
-    'sql_tpch_q5', 'sql_tpch_q18', 'sql_tpch_q6', 'sql_tpch_q14',
-    'sql_tpch_q4', 'sql_tpch_q16', 'fn_cast_double', 'fn_concat_ws',
-    'fn_concat', 'fn_replace', 'fn_prefix_match', 'fn_array_compact',
-    'fn_map_lookup', 'fn_math', 'fn_date_trunc', 'fn_string_ops',
-    'fn_regexp', 'fn_null_ops', 'fn_date_extract', 'fn_variant_get',
-    'fn_json_extract', 'llm_dedup_exact', 'llm_dedup_minhash',
-    'llm_dedup_ngram', 'llm_sim_topk', 'llm_ann_lsh',
-    'llm_sample_stratified', 'graph_cc_bounded', 'graph_scc_bounded',
-    'graph_bowtie_census', 'graph_khop_reachability',
-    'graph_label_propagation', 'graph_modularity', 'graph_pagerank',
-    'graph_adamic_adar', 'stat_median_polish', 'ts_abc_xyz',
-    'llm_kcenter_coreset', 'llm_fingerprint', 'llm_lang_dist',
-    'llm_lang_id', 'llm_pack_sequences', 'llm_quality_score',
-    'llm_text_stats', 'llm_tfidf_top_terms', 'llm_token_count',
-    'llm_wordcount', 'pit_pipeline', 'project_pit', 'rel_liesin',
-    'sql_grouping_sets', 'sql_tpch_q12', 'sql_tpch_q13', 'sql_tpch_q17',
-    'sql_tpch_q19', 'sql_tpch_q22', 'stream_session', 'stream_sliding',
-    'stream_tumbling', 'ts_cohort_retention', 'ts_funnel', 'ts_gap_fill',
-    'dq_contract_check', 'win_nth_value', 'fn_date_arith',
-    'llm_hard_negatives', 'llm_class_balance', 'ts_max_gap',
-    'fn_crypto_hash',
-]
+# The differential driver records correctness rows for the first 50
+# names in ``queries()`` order each round, in CORRECTNESS_r<N>.json
+# beside __spark_entry__.py. ``driver_order`` computes that order from
+# those files. ``_CHANGED`` holds the one fact they cannot: a query
+# whose plan or oracle changed after its last check. A commit that
+# changes a registered query's plan or oracle adds the query here with
+# the next round number; the entry expires by itself once a CORRECTNESS
+# file of that round or later lists the name.
+_CHANGED = {
+    "filter_extra_uris": 16,
+    "llm_dedup_minhash": 16,
+    "graph_ktruss_peel": 16,
+    "graph_bowtie_census": 16,
+    "llm_kcenter_coreset": 16,
+}
+
+_RECORD_DIR = Path(__file__).resolve().parent.parent
+_RECORD_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def driver_order(
+    names: list[str], record_dir: Path, changed: dict[str, int]
+) -> list[str]:
+    """``names`` (registration order) in driver-window order.
+
+    A name's last-checked round is the newest CORRECTNESS_r<N>.json in
+    ``record_dir`` that lists it (N compared as a number). Names never
+    checked, or listed in ``changed`` with a round newer than their
+    last check, come first; the rest follow by last-checked round
+    ascending. Ties keep registration order.
+    """
+    unknown = sorted(set(changed) - set(names))
+    if unknown:
+        raise ValueError(
+            f"_CHANGED names unregistered queries: {unknown} — "
+            "a typo here would silently shrink driver coverage"
+        )
+    last: dict[str, int] = {}
+    for path in record_dir.glob("CORRECTNESS_r*.json"):
+        try:
+            m = _RECORD_NAME.fullmatch(path.name)
+            if m is None:
+                raise ValueError("no round number in the file name")
+            checked = json.loads(path.read_text())
+            if not isinstance(checked, dict):
+                raise ValueError("not a JSON object of query names")
+        except ValueError as e:
+            raise ValueError(
+                f"unparseable correctness record {path}: {e}"
+            ) from e
+        for name in checked:
+            last[name] = max(last.get(name, 0), int(m[1]))
+
+    def checked_round(name: str) -> int:
+        rnd = last.get(name, 0)
+        return 0 if rnd < changed.get(name, 0) else rnd
+
+    return sorted(names, key=checked_round)
+
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query implementation and (optionally) its SQL oracle.
@@ -272,14 +143,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
-    missing = [n for n in _DRIVER_PRIORITY if n not in QUERIES]
-    if missing:
-        raise ValueError(
-            f"_DRIVER_PRIORITY names unregistered queries: {missing} — "
-            "a typo here would silently shrink driver coverage"
-        )
-    prioritized = set(_DRIVER_PRIORITY)
-    order = _DRIVER_PRIORITY + [n for n in QUERIES if n not in prioritized]
+    order = driver_order(list(QUERIES), _RECORD_DIR, _CHANGED)
     queries = {n: QUERIES[n] for n in order}
     oracles = {n: ORACLES[n] for n in order if n in ORACLES}
     return queries, oracles

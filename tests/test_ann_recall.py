@@ -36,27 +36,6 @@ def test_ivf_recall_at_10(spark, sf_dir):
     assert recall >= 0.70, f"IVF recall@10 {recall:.2f} < 0.70"
 
 
-def test_arrow_assignment_matches_expression_path(spark, sf_dir):
-    """The Arrow-matmul cell assignment (scale path for large k) must
-    agree with the Catalyst-expression path on the fixture — same
-    init, same qround'd centroids, same tie-break, so any divergence
-    is a real bug, not FP noise."""
-    from etl_geonames_spark.operators.llm import (
-        _arrow_cells,
-        _kmeans_cells,
-    )
-
-    a = {
-        r["vec_id"]: r["cluster"]
-        for r in _arrow_cells(spark, sf_dir, 32).collect()
-    }
-    b = {
-        r["vec_id"]: r["cluster"]
-        for r in _kmeans_cells(spark, sf_dir, 32, 1).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 def test_ann_lsh_witness_equals_python_recomputation(spark, sf_dir):
     """llm_ann_lsh_verifiable's full output — buckets, candidate
     sets, integer dot products, top-10 ranking — recomputed from
